@@ -1,14 +1,24 @@
 #!/usr/bin/env python
 """Benchmark harness — runs the declared query suite and prints ONE JSON line.
 
-Usage: python bench.py [--only q78_ann_ivf,q90_...] [--runs 3]
+Usage: python bench.py [--only q78_ann_ivf,q90_...] [--runs 3] [--plans DIR]
+       python bench.py --audit [--only ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
        SPARK_GRAFT_CPUS   (default all cores)
 
 Each query plan is fully executed via the noop sink (whole plan runs,
 nothing is collected to the driver — measures engine time, not driver
 serialization). Session startup and a table-cache warmup are excluded:
-the metric is query execution.
+the metric is query execution.  Every build + run is one
+``pin_scope()``: the pins and caches a query takes are freed when it
+ends, so repeated runs start from the same block storage.
+
+``--plans DIR`` also writes each selected query's
+``explain("formatted")`` to ``DIR/<name>.txt`` before timing it.
+``--audit`` times nothing: it prints one line of physical-plan shape
+counts per selected query (exchanges, broadcasts, sorts, Python
+evaluation, cartesian/nested-loop joins, file scans) — an exploratory
+view; the invariants live in tests/test_plans.py.
 
 ``--only`` + ``--runs`` is the SOLO RE-MEASURE protocol (round-8
 verdict): the full-suite numbers carry host-contention noise in the
@@ -21,15 +31,41 @@ host band, not a plan regression.
 from __future__ import annotations
 
 import argparse
+import io
 import json
 import os
+import re
 import sys
 import time
+from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ros_sql_spark.functions.pin import pin_scope
 from ros_sql_spark.plans.queries import QUERIES
 from ros_sql_spark.session import get_spark
+
+_AUDIT = {
+    "exch": r"\bExchange hashpartitioning",
+    "rng": r"\bExchange rangepartitioning",
+    "1p": r"\bExchange SinglePartition",
+    "bc": r"\bBroadcastExchange",
+    "sort": r"\bSort \[",
+    "pyR": r"\bBatchEvalPython",
+    "pyA": r"\b(ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas)",
+    "cart": r"\bCartesianProduct",
+    "nlj": r"\bBroadcastNestedLoopJoin",
+    "scans": r"\bFileScan parquet",
+}
+
+
+def audit_line(name: str, plan: str) -> str:
+    """One row of ``--audit``: plan-shape counts plus warning flags."""
+    a = {k: len(re.findall(rx, plan)) for k, rx in _AUDIT.items()}
+    flags = [f for f, k in (("CARTESIAN", "cart"), ("ROW-PYTHON", "pyR"),
+                            ("1-PART", "1p")) if a[k]]
+    cells = " ".join(f"{a[k]:>{max(len(k), 2)}d}" for k in _AUDIT)
+    return f"{name:28s} {cells}  {' '.join(flags)}".rstrip()
 
 
 def build_final_line(
@@ -104,6 +140,10 @@ def main() -> None:
                     help="runs per query, min taken (solo protocol: 3)")
     ap.add_argument("--no-floors", action="store_true",
                     help="skip the post-suite top-10 solo floor pass")
+    ap.add_argument("--plans", metavar="DIR", default=None,
+                    help="write each query's formatted plan to DIR/<name>.txt")
+    ap.add_argument("--audit", action="store_true",
+                    help="print plan-shape counts per query; time nothing")
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -118,13 +158,18 @@ def main() -> None:
             raise SystemExit(f"unknown queries: {unknown}")
         queries = {n: QUERIES[n] for n in names}
 
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-        # release operator-owned caches (e.g. q40's persisted bucket
-        # table) so repeated runs don't accumulate cached blocks
-        cached = getattr(df, "_rosql_cached", None)
-        if cached is not None:
-            cached.unpersist()
+    if args.audit:
+        print(f"{'query':28s} {' '.join(f'{k:>2s}' for k in _AUDIT)}")
+        for name, fn in queries.items():
+            with pin_scope():
+                plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+                print(audit_line(name, plan.toString()))
+        spark.stop()
+        return
+
+    def run(fn) -> None:
+        with pin_scope():
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     # Warmup: JIT/codegen + OS page cache for ALL four hot tables — the
     # top-10 slowest queries are documents/embeddings-bound (r8 verdict:
@@ -135,7 +180,7 @@ def main() -> None:
 
     for t in ("lineitem", "events", "documents", "embeddings"):
         load_table(spark, sf_dir, t).count()
-    run(QUERIES["q11_pricing_summary"](spark, sf_dir))
+    run(QUERIES["q11_pricing_summary"])
 
     # Round-14 directive #2: HOST-BAND CANARY.  Two consecutive driver
     # artifacts (r12 q15 spike, r13's whole-suite 208 s) landed in
@@ -154,7 +199,7 @@ def main() -> None:
         best = float("inf")
         for _ in range(5):
             t0 = time.perf_counter()
-            run(QUERIES["q01_scan_project"](spark, sf_dir))
+            run(QUERIES["q01_scan_project"])
             best = min(best, time.perf_counter() - t0)
         return round(best, 4)
 
@@ -163,11 +208,19 @@ def main() -> None:
     # min of two runs per query: the first run pays codegen/JIT compile,
     # which is fixed overhead a long-running cluster amortizes away.
     timings: dict[str, float] = {}
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
     for name, fn in queries.items():
+        if args.plans:
+            buf = io.StringIO()
+            with pin_scope(), redirect_stdout(buf):
+                fn(spark, sf_dir).explain("formatted")
+            with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
+                f.write(buf.getvalue())
         best = float("inf")
         for _ in range(args.runs):
             t0 = time.perf_counter()
-            run(fn(spark, sf_dir))
+            run(fn)
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 4)
     total = round(sum(timings.values()), 4)
@@ -204,7 +257,7 @@ def main() -> None:
             best = float("inf")
             for _ in range(3):
                 t0 = time.perf_counter()
-                run(queries[name](spark, sf_dir))
+                run(queries[name])
                 best = min(best, time.perf_counter() - t0)
             floors[name] = round(best, 4)
 

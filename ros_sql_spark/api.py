@@ -36,6 +36,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ros_sql_spark.functions.pin import cache, pin_scope
 from ros_sql_spark.operators.normalize import (
     ChildMeta,
     NormalizedTables,
@@ -227,10 +228,14 @@ def playback(
             df = df.filter(ts >= F.lit(t0_ns))
         if t1_ns is not None:
             df = df.filter(ts < F.lit(t1_ns))
-        df = df.orderBy(entry.ts_col, *entry.key_cols)
+        # keys usually lead with ts_col (declare_topics): sort on it once
+        df = df.orderBy(
+            entry.ts_col, *[k for k in entry.key_cols if k != entry.ts_col]
+        )
     return df
 
 
+@pin_scope()
 def expire(
     spark: SparkSession,
     store_path: str,
@@ -292,41 +297,37 @@ def expire(
     # persisted: each child's keyed delete evaluates the doomed frame
     # twice (candidacy probe + anti-join rewrite), so k children would
     # otherwise rescan the expired root range 2k times
-    doomed = (
+    doomed = cache(
         snapshot_read(spark, root_dir, prune=bounds)
         .filter(F.col(entry.ts_col) <= F.lit(hi))
         .select(*entry.key_cols)
         .distinct()
-        .persist()
     )
-    try:
-        versions: dict[str, int] = {}
-        for name, is_snap in sorted(store.items()):
-            tdir = os.path.join(base, name)
-            if name == entry.table:
-                continue
-            if not is_snap:
-                # silently skipping would strand orphaned child rows
-                # INVISIBLE to any rerun (the doomed root keys are
-                # deleted, so a retry finds nothing) — the exact
-                # failure the child-before-root ordering exists to
-                # prevent; fail loudly like the root check (round-8)
-                raise ValueError(
-                    f"{tdir} is not a snapshot table — expire() cannot "
-                    "purge its rows atomically; migrate the store with "
-                    "the snapshot recorder before expiring"
-                )
-            versions[name] = snapshot_delete_keys(
-                doomed,
-                tdir,
-                list(entry.key_cols),
-                tag=f"expire:{older_than_ns}",
+    versions: dict[str, int] = {}
+    for name, is_snap in sorted(store.items()):
+        tdir = os.path.join(base, name)
+        if name == entry.table:
+            continue
+        if not is_snap:
+            # silently skipping would strand orphaned child rows
+            # INVISIBLE to any rerun (the doomed root keys are
+            # deleted, so a retry finds nothing) — the exact
+            # failure the child-before-root ordering exists to
+            # prevent; fail loudly like the root check (round-8)
+            raise ValueError(
+                f"{tdir} is not a snapshot table — expire() cannot "
+                "purge its rows atomically; migrate the store with "
+                "the snapshot recorder before expiring"
             )
-        versions[entry.table] = snapshot_delete(
-            spark, root_dir, prune=bounds, tag=f"expire:{older_than_ns}"
+        versions[name] = snapshot_delete_keys(
+            doomed,
+            tdir,
+            list(entry.key_cols),
+            tag=f"expire:{older_than_ns}",
         )
-    finally:
-        doomed.unpersist()
+    versions[entry.table] = snapshot_delete(
+        spark, root_dir, prune=bounds, tag=f"expire:{older_than_ns}"
+    )
     return versions
 
 

@@ -7,34 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = [
     "ensure_scan_parallelism",
     "assert_bigint_partial_margin",
-    "release_local_checkpoints",
 ]
-
-
-def release_local_checkpoints(*dfs: DataFrame) -> None:
-    """Best-effort: free the block storage behind localCheckpoint frames.
-
-    A localCheckpoint pins its data as a storage-level RDD whose blocks
-    are reclaimed only when the ContextCleaner GCs the JVM Dataset — in
-    a long-running per-batch loop (streaming ingest) that lets pinned
-    batches accumulate between GC cycles (round-15 ADVICE).  Call this
-    AFTER every consuming action has completed: a released checkpoint
-    has no lineage to recompute from, so any later action on the frame
-    fails.
-
-    Implementation: a checkpointed Dataset's analyzed plan is a
-    ``LogicalRDD`` wrapping the checkpoint RDD; unpersist that RDD
-    (non-blocking).  Internal-API access is wrapped — on any mismatch
-    (plan shape, Spark version drift) this silently degrades to the
-    old ContextCleaner behavior instead of breaking the pipeline.
-    """
-    for df in dfs:
-        try:
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
-        except Exception:
-            pass
 
 
 _SIZE_SUFFIX = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}

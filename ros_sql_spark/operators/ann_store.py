@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ros_sql_spark.functions.pin import cache, pin, pin_scope
 from ros_sql_spark.sources.snapshot import (
     snapshot_commit,
     snapshot_compact,
@@ -54,6 +55,7 @@ __all__ = [
 ]
 
 
+@pin_scope()
 def _commit_clustered(
     df: DataFrame, table: str, target_files: int, meta: dict | None = None
 ) -> int:
@@ -65,14 +67,10 @@ def _commit_clustered(
     its range-boundary sampling job re-executes the child plan — here a
     KMeans transform or an Arrow encode UDF — so without it every row
     computes twice anyway, just invisibly."""
-    clustered = df.persist()
-    try:
-        out = clustered.repartitionByRange(
-            target_files, "_cell"
-        ).sortWithinPartitions("_cell")
-        return snapshot_commit(out, table, stats_cols=["_cell"], meta=meta)
-    finally:
-        clustered.unpersist()
+    out = cache(df).repartitionByRange(
+        target_files, "_cell"
+    ).sortWithinPartitions("_cell")
+    return snapshot_commit(out, table, stats_cols=["_cell"], meta=meta)
 
 
 def _load_centers(
@@ -250,7 +248,7 @@ def ivf_store_search(
     # sample/limit) would prune to one sample's cells and probe
     # another's, silently dropping neighbors (round-8 review); even a
     # deterministic one paid its lineage several times.
-    queries = queries.localCheckpoint(eager=False)
+    queries = pin(queries, eager=False)
     v, meta = _bound_version(spark, path, "assigned", None)
     centers = _load_centers(spark, path, meta.get("centers_version"))
     pruned = _pruned_cells_read(
@@ -380,7 +378,7 @@ def ivf_pq_store_search(
     # sample/limit) would prune to one sample's cells and probe
     # another's, silently dropping neighbors (round-8 review); even a
     # deterministic one paid its lineage several times.
-    queries = queries.localCheckpoint(eager=False)
+    queries = pin(queries, eager=False)
     v_codes, meta = _bound_version(spark, path, "codes", None)
     centers = _load_centers(spark, path, meta.get("centers_version"))
     books = _load_books(spark, path, meta.get("books_version"))

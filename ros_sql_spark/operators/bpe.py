@@ -30,6 +30,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ros_sql_spark.functions.pin import pin
+
 __all__ = ["bpe_train", "bpe_encode", "bpe_train_reference"]
 
 
@@ -137,7 +139,7 @@ def bpe_train(
         # for `cur`'s eager checkpoint (round-8 review finding).  The
         # fits-the-budget path pays only the histogram's own (vocab-
         # bounded) persistence on top of the pass it runs anyway.
-        hist = hist.localCheckpoint(eager=False)
+        hist = pin(hist, eager=False)
         # one job: limit(n+1) both sizes and fetches — if the result
         # fits the budget we already hold the WHOLE histogram and the
         # sequential trainer finishes with zero further Spark work.
@@ -158,9 +160,9 @@ def bpe_train(
     # CollapseProject can never re-inline the nested fold projections;
     # cache() measured a quadratic recompute exactly that way) and the
     # next round's top-K collect is the action that materializes it.
-    cur = hist.select(
+    cur = pin(hist.select(
         F.split("w", "").alias("sym"), F.col("n")
-    ).localCheckpoint(eager=True)
+    ), eager=True)
 
     merges: list[tuple[str, str]] = []
     while len(merges) < num_merges:
@@ -216,9 +218,9 @@ def bpe_train(
                 if p["r"] == left or p["l"] == right:
                     created_bound = max(created_bound, p["cnt"])
         merges.extend(accepted)
-        cur = cur.select(
+        cur = pin(cur.select(
             _apply_merges_expr("sym", accepted).alias("sym"), "n"
-        ).localCheckpoint(eager=False)
+        ), eager=False)
     return merges
 
 

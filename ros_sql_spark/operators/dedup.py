@@ -29,6 +29,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, Window
 
+from ros_sql_spark.functions.pin import cache, pin
+
 __all__ = [
     "exact_dedup",
     "exact_dedup_incremental",
@@ -551,7 +553,9 @@ def minhash_pairs(
     distinct pairs → signature-agreement estimate of Jaccard via
     zip_with/aggregate → threshold filter.
     """
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, k).cache()
+    # held while the lazy result is consumed: the caller's pin_scope()
+    # frees it (curate frees it as soon as components pinned the edges)
+    sigs = cache(minhash_signatures(df, id_col, text_col, num_hashes, k))
     b = _band_table(sigs, id_col, num_hashes, bands)
     bucket_sizes = b.groupBy("band", "band_hash").agg(F.count("*").alias("_bsz"))
     b = b.join(
@@ -581,11 +585,6 @@ def minhash_pairs(
         .select("id_a", "id_b", F.round(est, 6).alias("jaccard_est"))
         .filter(F.col("jaccard_est") >= threshold)
     )
-    # cache-lifetime convention (same as lsh_knn): the signature table
-    # must stay cached while the lazy result is consumed; callers that
-    # fully materialize downstream (e.g. connected_components' eager
-    # checkpoint) should unpersist via this handle.
-    out._rosql_cached = sigs
     return out
 
 
@@ -658,9 +657,7 @@ def minhash_pairs_incremental(
     occupancy, mirroring what the batch operator would see.
     """
     base_sigs, base_bands = base_index
-    new_sigs = minhash_signatures(
-        new_docs, id_col, text_col, num_hashes, k
-    ).cache()
+    new_sigs = cache(minhash_signatures(new_docs, id_col, text_col, num_hashes, k))
     new_bands = _band_table(new_sigs, id_col, num_hashes, bands)
 
     nb = new_bands.withColumn("_new", F.lit(True))
@@ -722,7 +719,6 @@ def minhash_pairs_incremental(
         .select("id_a", "id_b", F.round(est, 6).alias("jaccard_est"))
         .filter(F.col("jaccard_est") >= threshold)
     )
-    out._rosql_cached = new_sigs
     return out
 
 
@@ -840,12 +836,12 @@ def connected_components(
     # lever is FEWER rounds: the two-hop fusion below, and the
     # small-graph union-find fast path above it.)
     ob_sym = Observation()
-    sym = (
+    sym = pin(
         sym.unionByName(
             sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
-        .observe(ob_sym, F.count(F.lit(1)).alias("n_sym"))
-        .localCheckpoint(eager=True)
+        .observe(ob_sym, F.count(F.lit(1)).alias("n_sym")),
+        eager=True,
     )
     n_sym = ob_sym.get["n_sym"] or 0
     nodes_supplied = nodes is not None
@@ -881,7 +877,7 @@ def connected_components(
         # actions by the dedup/curate pipelines, and an un-pinned
         # finisher re-ran union-find per consumer (measured: qx26
         # regressed until this eager checkpoint landed)
-        lbl = _smallgraph_labels(uv).localCheckpoint(eager=True)
+        lbl = pin(_smallgraph_labels(uv), eager=True)
         # SHUFFLE_HASH on the label side (round-16, the _hop precedent
         # below): the finisher's label frame is gate-bounded (≤ the
         # small-graph edge budget) while nodes is corpus-sized — SMJ
@@ -941,12 +937,12 @@ def connected_components(
             cur = _hop(cur)
         hops_done += k
         ob = Observation()
-        new = cur.observe(
+        new = pin(cur.observe(
             ob,
             F.sum((F.col("comp") < F.col("_prev")).cast("long")).alias(
                 "n_changed"
             ),
-        ).localCheckpoint(eager=True)
+        ), eager=True)
         changed = ob.get["n_changed"] or 0
         labels = new.select("id", "comp")
         if changed == 0:
@@ -1044,18 +1040,18 @@ def connected_components_star(
         universe = universe.unionByName(
             nodes.select(F.col(id_col).cast("bigint").alias("_n"))
         )
-    universe = universe.distinct().localCheckpoint(eager=True)
+    universe = pin(universe.distinct(), eager=True)
     # canonical undirected form, deduped — (min, max) per pair; the
     # edge count rides the checkpoint so round-N's stability compare
     # never needs a separate count() job
     ob0 = Observation()
-    cur = (
+    cur = pin(
         e0.select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
         .distinct()
-        .observe(ob0, F.count(F.lit(1)).alias("n_edges"))
-        .localCheckpoint(eager=True)
+        .observe(ob0, F.count(F.lit(1)).alias("n_edges")),
+        eager=True,
     )
     n_cur = ob0.get["n_edges"] or 0
 
@@ -1162,26 +1158,24 @@ def connected_components_star(
     if n_cur <= small_graph_edges:
         # pinned for the same several-consumers reason as the
         # propagation operator's fast path (qx70 reads comp twice)
-        lbl = _smallgraph_labels(cur).localCheckpoint(eager=True)
+        lbl = pin(_smallgraph_labels(cur), eager=True)
         stable = True
     else:
         for _ in range((max_iter + 1) // 2):
             ob = Observation()
-            mid = _star(
+            mid = pin(_star(
                 _star(cur, large=True, dedup=False),
                 large=False,
                 dedup=False,
-            ).localCheckpoint(eager=False)
-            nxt = (
+            ), eager=False)
+            nxt = pin(
                 _star(_star(mid, large=True, dedup=False), large=False)
-                .observe(ob, F.count(F.lit(1)).alias("n_edges"))
-                .localCheckpoint(eager=True)
+                .observe(ob, F.count(F.lit(1)).alias("n_edges")),
+                eager=True,
             )
             n_next = ob.get["n_edges"] or 0
             if n_next <= small_graph_edges:
-                lbl = _smallgraph_labels(nxt).localCheckpoint(
-                    eager=True
-                )
+                lbl = pin(_smallgraph_labels(nxt), eager=True)
                 stable = True
                 break
             # fixed point: both stars leave the canonical edge set
@@ -1627,7 +1621,6 @@ def setsim_join_incremental(
     text_col: str = "text",
     threshold: float = 0.5,
     k: int = 5,
-    pins_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """EXACT Jaccard ≥ threshold pairs for an INGEST INCREMENT against
     an indexed corpus: (new × base) ∪ (new × new), never base × base —
@@ -1661,14 +1654,8 @@ def setsim_join_incremental(
     # with setsim_index's standing no-pin verdict), the increment pin
     # is what pays.  In the streaming ingest path new_docs is a
     # micro-batch — the pin is batch-sized, never corpus-sized, and the
-    # caller can reclaim its storage after its consuming actions via
-    # ``pins_out`` + release_local_checkpoints (round-15 ADVICE: the
-    # per-batch pins otherwise wait on the ContextCleaner's GC cycle).
-    new_sets = _shingle_sets(new_docs, id_col, text_col, k).localCheckpoint(
-        eager=False
-    )
-    if pins_out is not None:
-        pins_out.append(new_sets)
+    # batch's pin_scope() frees it.
+    new_sets = pin(_shingle_sets(new_docs, id_col, text_col, k), eager=False)
     new_tok = new_sets.select(
         "_id", F.explode_outer("_ts").alias("_s")
     ).filter(F.col("_s").isNotNull())
@@ -2001,10 +1988,9 @@ def remove_duplicate_spans(
     probe side of one action's DAG — persisting it computes the token
     fold once (measured at 20x/100k docs: 5.0s vs 7.4s; unlike q90's
     wide shingle arrays, three longs per row is cheap to cache).  The
-    cache handle rides on the result as ``_rosql_cached`` (module
-    convention) — callers release it after their action.  Pass False
-    where an unreleased cache would leak (curate() does: its output is
-    consumed across many later actions with no release point).
+    cache registers in the open ``pin_scope()``.  Pass False where it
+    would be held too long (curate() does: its output is consumed
+    across many later actions).
     """
     from ros_sql_spark.functions.util import ensure_scan_parallelism
 
@@ -2028,7 +2014,7 @@ def remove_duplicate_spans(
         id_col, F.posexplode_outer(windows).alias("_p", "_s")
     ).filter(F.col("_s").isNotNull())
     if persist_windows:
-        win = win.persist()
+        win = cache(win)
     dup = (
         win.groupBy("_s")
         .agg(F.count_distinct(F.col(id_col)).alias("_df"))
@@ -2068,7 +2054,6 @@ def remove_duplicate_spans(
             ),
         ).alias(text_col)
     )
-    out._rosql_cached = win if persist_windows else None
     return out
 
 

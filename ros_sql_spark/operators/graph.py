@@ -28,6 +28,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ros_sql_spark.functions.pin import pin
+
 __all__ = ["pagerank", "triangle_count"]
 
 
@@ -62,14 +64,14 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
     (the pagerank edge-pin precedent) versus re-running the candidate
     pair generator once per embedding.
     """
-    und = (
+    und = pin(
         edges.select(
             F.least(F.col(a_col), F.col(b_col)).cast("bigint").alias("a"),
             F.greatest(F.col(a_col), F.col(b_col)).cast("bigint").alias("b"),
         )
         .filter(F.col("a") < F.col("b"))
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=True)
+        .dropDuplicates(["a", "b"]),
+        eager=True,
     )
     deg = (
         und.select(F.col("a").alias("v"))
@@ -82,7 +84,7 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
     lt = (F.col("_da") < F.col("_db")) | (
         (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b"))
     )
-    o = (
+    o = pin(
         und.join(da, "a")
         .join(db, "b")
         .select(
@@ -90,8 +92,8 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
             F.when(lt, F.struct(F.col("_db").alias("d"), F.col("b").alias("v")))
             .otherwise(F.struct(F.col("_da").alias("d"), F.col("a").alias("v")))
             .alias("dst"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     w1 = o.select(F.col("src"), F.col("dst").alias("x"))
     w2 = o.select(F.col("src"), F.col("dst").alias("y"))
@@ -175,7 +177,7 @@ def pagerank(
     # + repartition ran twice in the setup action.  The operator is
     # already eager (it runs the dangling/count actions), so
     # materializing the pin up front costs nothing extra.
-    e = e.repartition("src").localCheckpoint(eager=True)
+    e = pin(e.repartition("src"), eager=True)
     # EAGER deg pin (round-16; was lazy + two sequenced setup actions):
     # with deg materialized up front, the dangling count and the node
     # count fuse into ONE crossJoin-of-aggs action over the two pins —
@@ -185,10 +187,10 @@ def pagerank(
     # materialized during the dangling action anyway), one fewer
     # driver/job round: qx29 solo A/B min-of-6 2.44 → 2.31 s, values
     # identical.
-    deg = (
+    deg = pin(
         e.groupBy("src")
-        .agg(F.count("*").alias("_deg"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("_deg")),
+        eager=True,
     )
     # every node has an out-edge by contract, so deg IS the node set —
     # ENFORCED, not assumed: a dst-only node would silently vanish from

@@ -36,6 +36,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
+from ros_sql_spark.functions.pin import pin
+
 __all__ = [
     "affine_bucket",
     "bucketed_row_number",
@@ -292,10 +294,10 @@ def skyline_2d(
     (x, y = gmax)."""
     x, y = F.col(minimize_col), F.col(maximize_col)
     base = df.filter(x.isNotNull() & y.isNotNull())
-    pg = (
+    pg = pin(
         base.groupBy(minimize_col)
-        .agg(F.max(maximize_col).alias("_gmax"))
-        .localCheckpoint(eager=True)
+        .agg(F.max(maximize_col).alias("_gmax")),
+        eager=True,
     )
     pb = affine_bucket(pg, minimize_col, n_buckets)
     bmax = pb.groupBy("_bkt").agg(F.max("_gmax").alias("_bm"))

@@ -34,6 +34,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
+from ros_sql_spark.functions.pin import pin
+
 __all__ = ["global_row_number", "rank_stats"]
 
 
@@ -58,7 +60,7 @@ def _local_numbered(
     checkpoint write costs more than the re-scan it saves."""
     spark = df.sparkSession
     if checkpoint_child:
-        df = df.localCheckpoint(eager=False)
+        df = pin(df, eager=False)
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     part = df.repartitionByRange(p, *order_exprs).withColumn(
         "_pid", F.spark_partition_id()

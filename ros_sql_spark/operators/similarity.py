@@ -34,6 +34,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
+from ros_sql_spark.functions.pin import cache
+
 __all__ = [
     "dot",
     "l2_norm",
@@ -296,19 +298,15 @@ def lsh_knn(
     even when both sides consume it (worth it for all-pairs dedup runs;
     3 longs/row vs recomputing the matmul).  The flag only applies to
     the ``query_filter`` form — with a separate ``queries`` frame the
-    corpus buckets are consumed once, nothing is persisted and no
-    ``_rosql_cached`` handle is attached.
+    corpus buckets are consumed once and nothing is persisted.
 
     Tune (bands, planes_per_band) for the recall/cost point: more bands
     → higher recall, more candidates.
 
     Cache lifetime (``persist_buckets=True``): the result is lazy, so
     the bucket table cannot be unpersisted here without defeating the
-    persist.  The handle is exposed as ``result._rosql_cached`` — a
-    long-lived session that calls ``lsh_knn`` repeatedly should
-    ``result._rosql_cached.unpersist()`` after its action.  Otherwise
-    the blocks are reclaimed by Spark's ContextCleaner once the plan is
-    garbage-collected (bounded, but GC-timed).
+    persist; it registers in the caller's ``pin_scope()`` and is freed
+    when that scope closes.
     """
     if num_planes is not None:
         planes_per_band = num_planes
@@ -336,7 +334,7 @@ def lsh_knn(
     if query_filter is not None:
         cq = corpus.filter(query_filter)
         if persist_buckets:
-            c = c.persist()
+            c = cache(c)
             qb = c.join(
                 F.broadcast(cq.select(id_col)), id_col
             )
@@ -375,13 +373,6 @@ def lsh_knn(
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
-    if persist_buckets and query_filter is not None:
-        # only the query_filter form consumes the corpus bucket table
-        # twice (query buckets derive from it); with a separate
-        # `queries` frame nothing was persisted, and attaching the
-        # handle anyway made callers unpersist a no-op while believing
-        # the docstring's promise (round-8 review)
-        out._rosql_cached = c  # caller may unpersist after its action
     return out
 
 
@@ -416,7 +407,7 @@ def cosine_dedup_pairs_lsh(
     bk = F.posexplode(
         hyperplane_buckets(vec_col, dim, bands, planes_per_band, seed)
     ).alias("band", "bucket")
-    buckets = corpus.select(F.col(id_col), bk).persist()
+    buckets = cache(corpus.select(F.col(id_col), bk))
     a = buckets.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = buckets.select(F.col(id_col).alias("id_b"), "band", "bucket")
     cand = (
@@ -434,7 +425,6 @@ def cosine_dedup_pairs_lsh(
         .select("id_a", "id_b", sim.alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
-    out._rosql_cached = buckets  # caller may unpersist after its action
     return out
 
 

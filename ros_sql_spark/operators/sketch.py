@@ -34,6 +34,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
+from ros_sql_spark.functions.pin import pin
+
 __all__ = ["KMV_DOMAIN", "kmv_hash", "bottom_k", "kmv_sketch",
            "kmv_estimate", "kmv_pair_overlap", "cm_build", "cm_estimate",
            "quantile_sketch", "quantile_estimate", "topk_sketch"]
@@ -267,7 +269,7 @@ def kmv_pair_overlap(
     scanned exactly once.  Pass False only when the caller already
     materialized (e.g. a snapshot-table sketch read)."""
     if materialize:
-        sketch = sketch.localCheckpoint(eager=True)
+        sketch = pin(sketch, eager=True)
     a = sketch.select(F.col(set_col).alias("_ta"), "h")
     b = sketch.select(F.col(set_col).alias("_tb"), "h")
     pairs = (

@@ -26,6 +26,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, Window
 
+from ros_sql_spark.functions.pin import pin
+
 __all__ = ["grid_radius_join", "grid_knn_join", "grid_bbox_join"]
 
 
@@ -134,19 +136,19 @@ def grid_knn_join(
     if k <= 0:
         raise ValueError(f"k must be a positive integer, got {k}")
 
-    bases = base.select(
+    bases = pin(base.select(
         F.col(bid),
         F.col(bx),
         F.col(by),
         F.expr(f"{bx} div {g}").alias("_cx"),
         F.expr(f"{by} div {g}").alias("_cy"),
-    ).localCheckpoint(eager=True)
+    ), eager=True)
 
     ob0 = Observation()
-    pend = (
+    pend = pin(
         probe.select(pid, px, py)
-        .observe(ob0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .observe(ob0, F.count(F.lit(1)).alias("n")),
+        eager=True,
     )
     n_pending = ob0.get["n"] or 0
 
@@ -215,7 +217,7 @@ def grid_knn_join(
         allc = cand if best is None else best.unionByName(cand)
         covered = ring >= span
         ob = Observation()
-        ranked = (
+        ranked = pin(
             allc.withColumn("rank", F.row_number().over(w_rank))
             .filter(F.col("rank") <= k)
             .withColumn("_cnt", F.count(F.lit(1)).over(w_grp))
@@ -235,8 +237,8 @@ def grid_knn_join(
                         F.col("_settled") & (F.col("rank") == 1), 1
                     ).otherwise(0)
                 ).alias("n_settled"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         n_settled = ob.get["n_settled"] or 0
         outs.append(

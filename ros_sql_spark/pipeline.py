@@ -38,6 +38,8 @@ from dataclasses import dataclass, field
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
 
+from ros_sql_spark.functions.pin import cache, pin, pin_scope
+
 __all__ = ["CurationResult", "curate", "publish_curated"]
 
 _log = logging.getLogger(__name__)
@@ -185,6 +187,25 @@ class CurationResult:
         return self._metrics
 
 
+def _components_of(make_pairs, id_col: str) -> DataFrame:
+    """``connected_components`` over the frame ``make_pairs()`` builds.
+
+    The pair operator's caches (minhash signatures, embedding buckets)
+    are dead once components has eagerly pinned the edges, so they are
+    freed right there rather than held by the caller's scope through
+    the rest of curate: taken out of a scope of their own, then freed
+    by a second one after components."""
+    from ros_sql_spark.operators.dedup import connected_components
+
+    with pin_scope() as held:
+        pairs = make_pairs()
+        pair_caches, held[:] = held[:], []
+    comp = connected_components(pairs, id_col=id_col)
+    with pin_scope() as held:
+        held += pair_caches
+    return comp
+
+
 def curate(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -279,11 +300,7 @@ def curate(
     in tests).
     """
     from ros_sql_spark.functions.text import punct_ratio, stopword_ratio, tokens
-    from ros_sql_spark.operators.dedup import (
-        connected_components,
-        minhash_pairs,
-        shingle_hashes,
-    )
+    from ros_sql_spark.operators.dedup import minhash_pairs, shingle_hashes
 
     ids = F.col(id_col)
     dropped: dict[str, DataFrame] = {}
@@ -475,39 +492,36 @@ def curate(
         # downstream read the pin co-partitioned at runtime
         # (CLAUDE.md's pinned-repartition rule; id is the final
         # attribute of the exact stage's struct extraction).
-        cur = cur.repartition(id_col).localCheckpoint(eager=False)
-        if near_dup_method == "setsim":
-            from ros_sql_spark.operators.dedup import (
-                setsim_join,
-                setsim_join_incremental,
-            )
+        cur = pin(cur.repartition(id_col), eager=False)
 
-            if setsim_base_index is not None:
-                pairs = setsim_join_incremental(
-                    cur, setsim_base_index, id_col=id_col,
-                    text_col=text_col, k=shingle_k,
-                    threshold=near_dup_threshold,
+        def near_pairs() -> DataFrame:
+            if near_dup_method == "setsim":
+                from ros_sql_spark.operators.dedup import (
+                    setsim_join,
+                    setsim_join_incremental,
                 )
-            else:
-                pairs = setsim_join(
+
+                if setsim_base_index is not None:
+                    return setsim_join_incremental(
+                        cur, setsim_base_index, id_col=id_col,
+                        text_col=text_col, k=shingle_k,
+                        threshold=near_dup_threshold,
+                    )
+                return setsim_join(
                     cur, id_col=id_col, text_col=text_col,
                     threshold=near_dup_threshold, k=shingle_k,
                 )
-        elif near_dup_method == "minhash":
-            pairs = minhash_pairs(
-                cur, id_col=id_col, text_col=text_col,
-                k=shingle_k, threshold=near_dup_threshold,
-            )
-        else:
+            if near_dup_method == "minhash":
+                return minhash_pairs(
+                    cur, id_col=id_col, text_col=text_col,
+                    k=shingle_k, threshold=near_dup_threshold,
+                )
             raise ValueError(
                 f"near_dup_method must be 'minhash' or 'setsim', "
                 f"got {near_dup_method!r}"
             )
-        comp = connected_components(pairs, id_col=id_col)
-        # components eagerly checkpointed the edges — an operator-owned
-        # signature cache (minhash) is dead weight from here on
-        if hasattr(pairs, "_rosql_cached"):
-            pairs._rosql_cached.unpersist()
+
+        comp = _components_of(near_pairs, id_col)
         members = comp.join(
             cur.select(id_col, text_col), id_col, "left"
         )
@@ -561,17 +575,16 @@ def curate(
             F.col(embedding_id_col).alias(id_col),
             F.col(embedding_col).alias("_vec"),
         ).join(cur.select(id_col), id_col, "left_semi")
-        vec_pairs = cosine_dedup_pairs_lsh(
-            vecs,
-            threshold=cosine_threshold,
-            dim=embedding_dim,
-            id_col=id_col,
-            vec_col="_vec",
+        vcomp = _components_of(
+            lambda: cosine_dedup_pairs_lsh(
+                vecs,
+                threshold=cosine_threshold,
+                dim=embedding_dim,
+                id_col=id_col,
+                vec_col="_vec",
+            ).select("id_a", "id_b"),
+            id_col,
         )
-        vcomp = connected_components(
-            vec_pairs.select("id_a", "id_b"), id_col=id_col
-        )
-        vec_pairs._rosql_cached.unpersist()
         vbest = (
             vcomp.join(cur, id_col)
             .groupBy("component")
@@ -691,6 +704,7 @@ def curate(
     return CurationResult(docs=cur, dropped=dropped, _obs=obs)
 
 
+@pin_scope()
 def publish_curated(
     result: CurationResult,
     table: str,
@@ -718,14 +732,8 @@ def publish_curated(
     from ros_sql_spark.sources.snapshot import snapshot_commit
 
     df = result.docs
-    cached = None
     if cluster_files:
-        cached = result.docs.persist()
-        df = cached.repartitionByRange(
+        df = cache(df).repartitionByRange(
             cluster_files, F.col(id_col)
         ).sortWithinPartitions(id_col)
-    try:
-        return snapshot_commit(df, table, stats_cols=[id_col])
-    finally:
-        if cached is not None:
-            cached.unpersist()
+    return snapshot_commit(df, table, stats_cols=[id_col])

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from ros_sql_spark.functions.parity import DECIMAL_MONEY, disc_price, money, r6, tus
+from ros_sql_spark.functions.pin import pin
 from ros_sql_spark.sources.io import load_table
 
 __all__ = ["QUERIES"]
@@ -1870,9 +1871,9 @@ def q90_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # beat unpinned — interleaved min-of-5 1.55 → 1.45 s solo); at
     # scale this is 1 corpus shingle pass + 3 narrow-hash reads
     # instead of 4 corpus passes.
-    sh = shingle_hashes(docs, "doc_id", "text", 5).select(
+    sh = pin(shingle_hashes(docs, "doc_id", "text", 5).select(
         "doc_id", bucket.alias("bucket"), F.explode_outer("_hs").alias("s")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     eval_sh = sh.filter(F.col("bucket") >= 98).select("doc_id", "s")
     train_sh = sh.filter(F.col("bucket") < 80).select("doc_id", "s")
     # k=4, not the ~1e-4-FP k=10: these bits only GENERATE candidates —
@@ -2473,9 +2474,9 @@ def qx10_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one lazy pin: the edge pipeline feeds the base loop's checkpoint,
     # the contracted loop's checkpoint AND the fresh-node derivation —
     # three materializations of the same quadratic scoring without it
-    edges = pairs.select(
+    edges = pin(pairs.select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     base_edges = edges.filter(
         (F.col("id_a") < 30) & (F.col("id_b") < 30)
     )
@@ -4020,11 +4021,11 @@ def qx43_channel_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
             channel("purchase")
         )
     )
-    per_user = (
+    per_user = pin(
         ev.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
-        .agg(F.sum(money("value")).alias("_tot"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum(money("value")).alias("_tot")),
+        eager=True,
     )
     gate = per_user.agg(
         F.sum("_tot").alias("_sum_all"),
@@ -4097,7 +4098,7 @@ def qx44_shared_pipeline_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     li_o = li.groupBy("l_orderkey").agg(F.sum(disc_price()).alias("_orev"))
-    prof = (
+    prof = pin(
         li_o.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .join(
@@ -4111,10 +4112,10 @@ def qx44_shared_pipeline_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(
             F.sum("_orev").alias("_rev"),
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        )
+        ),
         # pinned: both self-join sides consume it with different
         # projections, which defeats exchange reuse (docstring numbers)
-        .localCheckpoint(eager=True)
+        eager=True,
     )
     a = prof.select(
         "c_custkey", "n_name",
@@ -4306,7 +4307,7 @@ def qx48_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["c", "s"])
     )
-    edges = (
+    edges = pin(
         pair.select(
             (F.col("c") * 2).alias("src"), (F.col("s") * 2 + 1).alias("dst")
         )
@@ -4321,8 +4322,8 @@ def qx48_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         # precedent): the materialized checkpoint carries hash(src)
         # partitioning, so each hop's edge side reads co-partitioned
         # at runtime instead of re-exchanging per hop.
-        .repartition("src")
-        .localCheckpoint(eager=False)
+        .repartition("src"),
+        eager=False,
     )
     seeds = cust.filter(F.col("c_nationkey") == 1).select(
         (F.col("c_custkey") * 2).alias("node")
@@ -4413,10 +4414,10 @@ def qx50_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     and summed as DECIMAL (associative), with one final round(6) —
     no order-dependent float summation anywhere."""
     docs = _t(spark, sf_dir, "documents").select("lang", "source")
-    cells = (
+    cells = pin(
         docs.groupBy("lang", "source")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).cast("bigint").alias("_c")),
+        eager=True,
     )
     rmar = cells.groupBy("lang").agg(F.sum("_c").alias("_r"))
     cmar = cells.groupBy("source").agg(F.sum("_c").alias("_k"))
@@ -4803,11 +4804,11 @@ def qx56_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
       exact BIGINT counts, round(6) both engines."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     pt = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = (
+    baskets = pin(
         li.join(pt, li["l_partkey"] == pt["p_partkey"])
         .groupBy("l_orderkey")
-        .agg(F.collect_set("p_brand").alias("_its"))
-        .localCheckpoint(eager=False)
+        .agg(F.collect_set("p_brand").alias("_its")),
+        eager=False,
     )
     n = baskets.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
     items = baskets.select(
@@ -4816,10 +4817,10 @@ def qx56_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     supports = items.groupBy("_i").agg(
         F.count(F.lit(1)).cast("bigint").alias("_s")
     )
-    freq = (
+    freq = pin(
         supports.crossJoin(F.broadcast(n))
-        .filter(F.lit(8) * F.col("_s") >= F.col("_n"))
-        .localCheckpoint(eager=True)
+        .filter(F.lit(8) * F.col("_s") >= F.col("_n")),
+        eager=True,
     )
     fb = (
         items.join(F.broadcast(freq.select("_i")), "_i")
@@ -4977,7 +4978,7 @@ def qx58_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("day"), F.lit("1970-01-01").cast("date"))
         + F.lit(4)
     ) % F.lit(7)
-    trended = (
+    trended = pin(
         daily.select(
             "day",
             "_rev",
@@ -4985,8 +4986,8 @@ def qx58_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("_rev").over(w7).alias("_c7"),
         )
         .filter(F.col("_c7") == 7)
-        .select("day", dow.alias("dow"), "_rev", "_t7")
-        .localCheckpoint(eager=True)
+        .select("day", dow.alias("dow"), "_rev", "_t7"),
+        eager=True,
     )
     idx = trended.groupBy("dow").agg(
         F.sum(F.lit(7) * F.col("_rev")).alias("_sr"),
@@ -5044,14 +5045,14 @@ def qx59_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ros_sql_spark.operators.ordered import bucketed_row_number
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    o = (
+    o = pin(
         docs.select(
             "doc_id",
             F.lower("text").alias("_k"),
             F.array_distinct(F.split(F.lower("text"), " ")).alias("_s"),
         )
-        .withColumn("_bkt", F.substring("_k", 1, 1))
-        .localCheckpoint(eager=False)
+        .withColumn("_bkt", F.substring("_k", 1, 1)),
+        eager=False,
     )
     ranked = bucketed_row_number(o, "_bkt", ["_k", "doc_id"]).select(
         "doc_id", "_s", "_rn"
@@ -5112,10 +5113,10 @@ def qx60_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    j = (
+    j = pin(
         totals.join(cust, totals["o_custkey"] == cust["c_custkey"])
-        .select("c_mktsegment", "c_custkey", "_x")
-        .localCheckpoint(eager=True)
+        .select("c_mktsegment", "c_custkey", "_x"),
+        eager=True,
     )
     from ros_sql_spark.operators.ordered import affine_bucket
 
@@ -5281,12 +5282,12 @@ def qx62_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # day would inflate the (n, T) scalar yet vanish from the rank
     # path's key join — and the streaming twin already filters)
     ev = _t(spark, sf_dir, "events").filter(F.col("ts_ns").isNotNull())
-    daily = (
+    daily = pin(
         ev.groupBy(
             F.expr("ts_ns div 86400000000000").alias("day")
         )
-        .agg(F.sum(money("value")).alias("_x"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum(money("value")).alias("_x")),
+        eager=True,
     )
     return (
         cusum_scores(daily)
@@ -5322,13 +5323,13 @@ def qx63_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("value").isNotNull()
     )
     is_p = F.col("event_type") == "purchase"
-    grid = (
+    grid = pin(
         ev.groupBy(F.col("value").alias("v"))
         .agg(
             F.count(F.when(is_p, 1)).alias("_d1"),
             F.count(F.when(~is_p, 1)).alias("_d2"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     from ros_sql_spark.operators.ordered import affine_bucket
 
@@ -5393,13 +5394,13 @@ def qx64_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ros_sql_spark.operators.ordered import affine_bucket
 
     li = _t(spark, sf_dir, "lineitem")
-    g = (
+    g = pin(
         li.groupBy(
             F.col("l_returnflag").alias("f"),
             F.col("l_extendedprice").alias("p"),
         )
-        .agg(F.sum("l_quantity").cast("bigint").alias("_wt"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum("l_quantity").cast("bigint").alias("_wt")),
+        eager=True,
     )
     tot = g.groupBy("f").agg(F.sum("_wt").alias("_w"))
     binned = affine_bucket(g, "p")
@@ -5487,11 +5488,11 @@ def qx65_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin("purchase", "click")
         & F.col("value").isNotNull()
     )
-    o = ev.select(
+    o = pin(ev.select(
         F.col("event_type").alias("g"),
         F.col("value").alias("v"),
         "event_id",
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     from ros_sql_spark.operators.ordered import affine_bucket
 
     binned = affine_bucket(o, "v")
@@ -5501,7 +5502,7 @@ def qx65_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ng = o.groupBy("g").agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
     K = 20
-    b = (
+    b = pin(
         ranked.join(F.broadcast(ng), "g")
         .withColumn(
             "bin", F.expr(f"((_rk - 1) * {K}) div _n").cast("bigint")
@@ -5510,8 +5511,8 @@ def qx65_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.sum(money("v")).alias("_s"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     gm = d("_s") / d("n_rows")
@@ -5688,11 +5689,11 @@ def qx69_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint, the qx58 idiom), so the final plan reads an
     ExistingRDD and the suite's SinglePartition guard sees only the
     scalar combine."""
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = pin(_t(spark, sf_dir, "events").filter(
         F.col("ts_ns").isNotNull()
         & F.col("event_type").isin("click", "purchase")
         & F.col("user_id").isNotNull()
-    ).localCheckpoint(eager=False)  # three consumers, cheap frame
+    ), eager=False)  # three consumers, cheap frame
     day = lambda c: F.expr(f"{c} div 86400000000000")  # noqa: E731
     first_click = (
         ev.filter(F.col("event_type") == "click")
@@ -5749,14 +5750,14 @@ def qx69_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_risk").cast("double")
         ),
     ).otherwise(F.lit(0.0))
-    km = km.select(
+    km = pin(km.select(
         "dur",
         "n_risk",
         "n_events",
         "n_censored",
         F.max(factor_zero).over(wpre).alias("_z"),
         F.sum(lnterm).over(wpre).alias("_ls"),
-    ).localCheckpoint(eager=True)  # windows run here (qx58 idiom)
+    ), eager=True)  # windows run here (qx58 idiom)
     return km.select(
         F.col("dur").alias("duration_days"),
         "n_risk",
@@ -5808,15 +5809,15 @@ def qx70_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ros_sql_spark.operators.spatial import grid_radius_join
 
     eps, minpts = 300, 4
-    cust = (
+    cust = pin(
         _t(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") < 1500)
         .select(
             F.col("c_custkey").alias("p_id"),
             ((F.col("c_custkey") * 48271 + 11) % 10000).alias("px"),
             ((F.col("c_custkey") * 69621 + 7) % 10000).alias("py"),
-        )
-        .localCheckpoint(eager=False)  # probe + base + later joins
+        ),
+        eager=False,  # probe + base + later joins
     )
     base = cust.select(
         F.col("p_id").alias("b_id"),
@@ -5826,15 +5827,15 @@ def qx70_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ε-neighborhoods INCLUDING self (|N_ε(p)| ∋ p, the textbook
     # definition minPts counts against); pinned — degree, core-core
     # edges and border attachment are three differing projections
-    nb = grid_radius_join(cust, base, eps).select(
+    nb = pin(grid_radius_join(cust, base, eps).select(
         "p_id", "b_id"
-    ).localCheckpoint(eager=False)
-    core = (
+    ), eager=False)
+    core = pin(
         nb.groupBy("p_id")
         .agg(F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") >= minpts)
-        .select(F.col("p_id").alias("id"))
-        .localCheckpoint(eager=True)  # consumed by 3 separate actions
+        .select(F.col("p_id").alias("id")),
+        eager=True,  # consumed by 3 separate actions
     )
     core_edges = (
         nb.filter(F.col("p_id") < F.col("b_id"))
@@ -6033,10 +6034,10 @@ def qx74_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.explode_outer(F.split(F.lower("text"), " ")).alias("term"),
     ).filter(F.col("term").isNotNull())
-    counts = (
+    counts = pin(
         ttok.groupBy("lang", "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("c")),
+        eager=False,
     )
     totals = counts.groupBy("lang").agg(F.sum("c").alias("n_l"))
     vocab = counts.select("term").distinct().agg(
@@ -6266,7 +6267,7 @@ def _logreg_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ros_sql_spark.functions.text import stopword_ratio, tokens
 
     toks = tokens("text")
-    feats = (
+    feats = pin(
         _t(spark, sf_dir, "documents")
         .filter(F.col("lang").isNotNull())
         .select(
@@ -6274,7 +6275,7 @@ def _logreg_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("lang") == "en").cast("bigint").alias("y"),
             (F.size(toks).cast("double") / F.lit(100.0)).alias("x1"),
             F.round(stopword_ratio(toks, "en"), 6).alias("x2"),
-        )
+        ),
         # round-15: the feature frame is consumed by FIVE separate
         # actions (four IRLS moment collects + the caller's scoring
         # action) — unpinned, each one re-ran the documents scan and
@@ -6284,7 +6285,7 @@ def _logreg_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         # it back.  Measured solo min-of-3 at sf0.1: qx77 1.31→0.92 s,
         # qx78 1.62→1.41 s; values bit-identical (the pinned frame IS
         # the same rounded feature grid).
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     tr = feats.filter(F.col("doc_id") % 5 != 0)
 

@@ -38,6 +38,8 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ros_sql_spark.functions.pin import pin, pin_scope
+
 
 def write_dataset(
     df: DataFrame,
@@ -143,6 +145,7 @@ def _touched_predicate(pcols: list[str], rel_dirs: list[str]):
     return out
 
 
+@pin_scope()  # nothing pinned here escapes
 def compact_dataset(
     spark: SparkSession,
     path: str,
@@ -213,15 +216,15 @@ def compact_dataset(
 
     if unpartitioned:
         n_files = max(1, math.ceil(summary["bytes"] / target_file_bytes))
-        merged = touched.coalesce(n_files).localCheckpoint(eager=True)
+        merged = pin(touched.coalesce(n_files), eager=True)
         merged.write.mode("overwrite").option(
             "maxRecordsPerFile", str(rows_per_file)
         ).parquet(path)
         return summary
 
-    merged = (
-        touched.repartition(*[F.col(c) for c in pcols])
-        .localCheckpoint(eager=True)
+    merged = pin(
+        touched.repartition(*[F.col(c) for c in pcols]),
+        eager=True,
     )
     conf_key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(conf_key, None)

@@ -52,6 +52,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ros_sql_spark.functions.pin import pin, pin_scope
+
 __all__ = [
     "snapshot_commit",
     "snapshot_read",
@@ -989,6 +991,7 @@ def _key_candidates(
     return candidates, carried
 
 
+@pin_scope()  # nothing pinned here escapes
 def snapshot_delete_keys(
     keys_df: DataFrame,
     table: str,
@@ -1022,7 +1025,7 @@ def snapshot_delete_keys(
     # key set than the anti-join and carry a file whose doomed key only
     # materialized second (round-8 review).  Lazy localCheckpoint: the
     # empty probe below is the materializing action.
-    keys_df = keys_df.select(*keys).distinct().localCheckpoint(eager=False)
+    keys_df = pin(keys_df.select(*keys).distinct(), eager=False)
     # empty-keys short-circuit BEFORE candidacy: without it, files the
     # stats cannot bound (non-JSON-native key types, unreadable
     # footers) are "always candidates" and an empty purge — a retried

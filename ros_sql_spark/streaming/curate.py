@@ -114,6 +114,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ros_sql_spark.functions.pin import pin
 from ros_sql_spark.sources.snapshot import snapshot_commit, snapshot_read
 from ros_sql_spark.streaming.dedup import (
     _T_DOCS,
@@ -207,9 +208,9 @@ def curate_ingest_batch(
         if r:
             return {k: v for k, v in r[0].asDict().items()}
 
-    cur = batch_df.select(
+    cur = pin(batch_df.select(
         F.col(id_col).cast("bigint").alias(id_col), F.col(text_col)
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     n_batch = cur.count()
     n_prev = n_batch
 
@@ -220,13 +221,13 @@ def curate_ingest_batch(
     if boilerplate_max_df is not None:
         from ros_sql_spark.operators.dedup import remove_boilerplate
 
-        cur = remove_boilerplate(
+        cur = pin(remove_boilerplate(
             cur,
             id_col=id_col,
             text_col=text_col,
             passage_tokens=boilerplate_passage_tokens,
             max_doc_freq=boilerplate_max_df,
-        ).localCheckpoint(eager=False)
+        ), eager=False)
         n_now = cur.count()
         n_bp = n_prev - n_now
         n_prev = n_now
@@ -237,14 +238,14 @@ def curate_ingest_batch(
     if span_dedup_k is not None:
         from ros_sql_spark.operators.dedup import remove_duplicate_spans
 
-        cur = remove_duplicate_spans(
+        cur = pin(remove_duplicate_spans(
             cur,
             id_col=id_col,
             text_col=text_col,
             k=span_dedup_k,
             min_docs=span_min_docs,
             persist_windows=False,
-        ).localCheckpoint(eager=False)
+        ), eager=False)
         n_now = cur.count()
         n_span = n_prev - n_now
         n_prev = n_now
@@ -273,10 +274,10 @@ def curate_ingest_batch(
         & (F.col("_punct") < max_punct_ratio)
         & (F.col("_stop") > min_stopword_ratio)
     )
-    cur = (
+    cur = pin(
         feats.filter(keep)
-        .select(id_col, text_col)
-        .localCheckpoint(eager=False)
+        .select(id_col, text_col),
+        eager=False,
     )
     n_now = cur.count()
     n_quality = n_prev - n_now
@@ -320,9 +321,7 @@ def curate_ingest_batch(
                 .select(id_col)
                 .distinct()
             )
-        cur = cur.join(contaminated, id_col, "left_anti").localCheckpoint(
-            eager=False
-        )
+        cur = pin(cur.join(contaminated, id_col, "left_anti"), eager=False)
         n_now = cur.count()
         n_decontam = n_prev - n_now
         n_prev = n_now
@@ -348,13 +347,13 @@ def curate_ingest_batch(
             hyperplane_buckets,
         )
 
-        batch_vecs = (
+        batch_vecs = pin(
             embeddings.select(
                 F.col(embedding_id_col).cast("bigint").alias(id_col),
                 F.col(embedding_col).alias("_vec"),
             )
-            .join(cur.select(id_col), id_col, "left_semi")
-            .localCheckpoint(eager=False)
+            .join(cur.select(id_col), id_col, "left_semi"),
+            eager=False,
         )
         # posexplode_outer + null filter: the Generate invariant
         # (CLAUDE.md) — a non-outer explode makes InferFiltersFromGenerate
@@ -362,15 +361,15 @@ def curate_ingest_batch(
         bk = F.posexplode_outer(
             hyperplane_buckets("_vec", embedding_dim, 16, 4, 42)
         ).alias("band", "bucket")
-        batch_vb = (
+        batch_vb = pin(
             batch_vecs.select(F.col(id_col), bk)
             .filter(F.col("bucket").isNotNull())
             .select(
                 id_col,
                 F.col("band").cast("int").alias("band"),
                 F.col("bucket").cast("bigint").alias("bucket"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
 
         def _empty(schema: str) -> DataFrame:
@@ -403,7 +402,7 @@ def curate_ingest_batch(
         base_touched = base_vb.join(
             F.broadcast(touched), ["band", "bucket"], "left_semi"
         )
-        cand_base = (
+        cand_base = pin(
             nb.join(
                 base_touched.select(
                     F.col(id_col).alias("id_b"), "band", "bucket"
@@ -411,8 +410,8 @@ def curate_ingest_batch(
                 ["band", "bucket"],
             )
             .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-            .localCheckpoint(eager=False)
+            .dropDuplicates(["id_a", "id_b"]),
+            eager=False,
         )
         cand_new = (
             nb.join(
@@ -447,13 +446,13 @@ def curate_ingest_batch(
             .select(F.col(id_col).alias("id_b"), F.col("_vec").alias("_vb"))
         )
         sim = F.round(cosine_arrow("_va", "_vb"), 6)
-        pairs = (
+        pairs = pin(
             cand_base.join(va, "id_a").join(vb_base, "id_b")
             .unionByName(cand_new.join(va, "id_a").join(vb_new, "id_b"))
             .select("id_a", "id_b", sim.alias("_sim"))
             .filter(F.col("_sim") >= cosine_threshold)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=False)
+            .select("id_a", "id_b"),
+            eager=False,
         )
         comp = connected_components(pairs, id_col="cid")
         batch_node_ids = batch_vecs.select(F.col(id_col).alias("cid"))
@@ -470,11 +469,11 @@ def curate_ingest_batch(
         sem_dropped = batch_members.select("cid").join(
             keep_of_new, "cid", "left_anti"
         )
-        cur = cur.join(
+        cur = pin(cur.join(
             sem_dropped.select(F.col("cid").alias(id_col)),
             id_col,
             "left_anti",
-        ).localCheckpoint(eager=False)
+        ), eager=False)
 
     # 2. near-dup (+ exact, Jaccard 1.0) setsim ingest — the stateful
     #    stage owns its index, watermarks and crash recovery
@@ -588,7 +587,7 @@ def curate_ingest_batch(
                 if budget_token_col is not None
                 else token_count_bpe(text_col)
             )
-            kept_mix = token_budget_mix(
+            kept_mix = pin(token_budget_mix(
                 pub,
                 residual,
                 token_col=tok,
@@ -599,7 +598,7 @@ def curate_ingest_batch(
                 F.col(id_col).cast("bigint").alias(id_col),
                 "source",
                 F.col("_n_tok").alias("n_tok"),
-            ).localCheckpoint(eager=False)  # two consumers: spend agg + commit
+            ), eager=False)  # two consumers: spend agg + commit
             # O(sources) bounded collect of THIS batch's admissions
             # (mixtures are O(10²) sources; token_budget_mix already
             # broadcasts them as a literal map)

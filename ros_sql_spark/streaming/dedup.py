@@ -55,6 +55,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ros_sql_spark.functions.pin import pin, pin_scope
 from ros_sql_spark.sources.snapshot import (
     _list_versions,
     _read_manifest,
@@ -107,6 +108,7 @@ def _pre_state(
     return None, True
 
 
+@pin_scope()  # nothing pinned here escapes: free it all per batch
 def setsim_ingest_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -243,17 +245,14 @@ def setsim_ingest_batch(
     # empty-base batches run through the SAME incremental path: with no
     # stored freq the rank is the batch's own df, which is exactly the
     # batch-mode setsim_join order — one code path, identical output.
-    _batch_pins: list[DataFrame] = []
-    pairs = setsim_join_incremental(
+    pairs = pin(setsim_join_incremental(
         batch,
         (base_sets, base_prefix, base_freq),
         id_col=id_col,
         text_col=text_col,
         threshold=threshold,
         k=k,
-        pins_out=_batch_pins,
-    ).select("id_a", "id_b").localCheckpoint(eager=False)
-    _batch_pins.append(pairs)
+    ).select("id_a", "id_b"), eager=False)
 
     comp = connected_components(pairs, id_col="cid")
     batch_ids = batch.select(F.col(id_col).alias("cid"))
@@ -274,9 +273,9 @@ def setsim_ingest_batch(
     dropped_ids = batch_members.select("cid").join(
         keep_of_new, "cid", "left_anti"
     )
-    survivors = batch.join(
+    survivors = pin(batch.join(
         dropped_ids.select(F.col("cid").alias(id_col)), id_col, "left_anti"
-    ).localCheckpoint(eager=False)
+    ), eager=False)
 
     # cluster-label maintenance: contraction over the PRE-batch label
     # map — the delta is fresh batch nodes plus base rows whose
@@ -304,9 +303,7 @@ def setsim_ingest_batch(
     # ACTIONS (ReusedExchange only dedups within one), so without the
     # checkpoints the survivor/batch shingling would re-execute once
     # per consuming commit (CLAUDE.md's several-separate-actions rule).
-    s_sets = _shingle_sets(survivors, id_col, text_col, k).localCheckpoint(
-        eager=False
-    )
+    s_sets = pin(_shingle_sets(survivors, id_col, text_col, k), eager=False)
     s_tok = s_sets.select(
         "_id", F.explode_outer("_ts").alias("_s")
     ).filter(F.col("_s").isNotNull())
@@ -317,11 +314,12 @@ def setsim_ingest_batch(
     # the probe ranked unseen shingles by the FULL batch's df — store
     # that exact number for the unseen shingles that survive
     batch_freq = batch_tok.groupBy("_s").agg(F.count("*").alias("_bdf"))
-    ranked = (
+    ranked = pin(
         s_tok.join(base_freq, "_s", "left")
         .join(batch_freq, "_s")
-        .select("_id", "_s", F.coalesce("_df", "_bdf").alias("_df"))
-    ).localCheckpoint(eager=False)
+        .select("_id", "_s", F.coalesce("_df", "_bdf").alias("_df")),
+        eager=False,
+    )
     s_prefix = _prefix_table(ranked, threshold)
     freq_new = (
         ranked.select("_s", "_df")
@@ -380,15 +378,6 @@ def setsim_ingest_batch(
                 ),
             )
         committed.append(name)
-    # every consuming action (counts + commits) is done and nothing
-    # pinned escapes this function — reclaim the per-batch checkpoint
-    # storage NOW instead of waiting on the ContextCleaner's GC cycle
-    # (round-15 ADVICE: pins otherwise accumulate across micro-batches)
-    from ros_sql_spark.functions.util import release_local_checkpoints
-
-    release_local_checkpoints(
-        *_batch_pins, survivors, s_sets, ranked
-    )
     return {
         "n_batch": n_batch,
         "n_kept": n_kept,

@@ -33,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ros_sql_spark.functions.parity import money
+from ros_sql_spark.functions.pin import pin
 from ros_sql_spark.operators.drift import cusum_scores
 from ros_sql_spark.sources.snapshot import (
     snapshot_merge,
@@ -71,7 +72,7 @@ def drift_ingest_batch(
         # no-op, never raise
         return int((snapshot_meta(spark, table) or {}).get("n_days", 0))
 
-    delta = (
+    delta = pin(
         batch_df.filter(F.col(ts_col).isNotNull())
         .groupBy(
             F.expr(f"{ts_col} div 86400000000000").alias("day")
@@ -83,8 +84,8 @@ def drift_ingest_batch(
             F.coalesce(
                 F.sum(money(value_col)), F.lit(0)
             ).cast(_S_TYPE).alias("_d")
-        )
-        .localCheckpoint(eager=False)  # consumed by probe + merge
+        ),
+        eager=False,  # consumed by probe + merge
     )
     if pre is not None:
         # incremental-probe discipline: old sums of exactly the
@@ -101,7 +102,7 @@ def drift_ingest_batch(
         joined = delta.select(
             "day", "_d", F.lit(None).cast(_S_TYPE).alias("_old")
         )
-    joined = joined.localCheckpoint(eager=True)  # merge rows + counters
+    joined = pin(joined, eager=True)  # merge rows + counters
     merged = joined.select(
         "day",
         (
@@ -147,10 +148,10 @@ def drift_report_read(
     """Top-``k`` change-point candidates in qx62's exact shape
     (day, cusum, score) — recomputed from the calendar-bounded daily
     state with the SAME operator the batch query runs."""
-    daily = (
+    daily = pin(
         snapshot_read(spark, f"{store}/{_T_DAILY}")
-        .select("day", F.col("s").alias("_x"))
-        .localCheckpoint(eager=True)
+        .select("day", F.col("s").alias("_x")),
+        eager=True,
     )
     return (
         cusum_scores(daily)

@@ -72,6 +72,7 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ros_sql_spark.functions.pin import pin
 from ros_sql_spark.sources.snapshot import snapshot_merge, snapshot_meta
 from ros_sql_spark.streaming.dedup import _pre_state
 from ros_sql_spark.streaming.util import (
@@ -185,14 +186,14 @@ def profile_ingest_batch(
         else f"'{c}', CAST(`{c}` AS STRING)"
         for c, numeric in columns.items()
     )
-    keyed = (
+    keyed = pin(
         batch_df.selectExpr(
             f"stack({n}, {stack_args}) AS (col, v)"
         )
         .filter(F.col("v").isNotNull())
         .groupBy("col", "v")
-        .agg(F.count(F.lit(1)).alias("_d"))
-        .localCheckpoint(eager=False)  # consumed by probe + merge
+        .agg(F.count(F.lit(1)).alias("_d")),
+        eager=False,  # consumed by probe + merge
     )
     # keyed_count: touched (col, v) pairs ≤ batch_rows × n_columns —
     # an upper bound already in hand from the scalar-aggregate job

@@ -40,6 +40,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from ros_sql_spark.functions.pin import pin
 from ros_sql_spark.sources.snapshot import (
     snapshot_merge,
     snapshot_meta,
@@ -129,12 +130,12 @@ def quality_ingest_batch(
 
     # --- uniqueness: increment-keyed delta against stored multiplicity
     uq = _unique_name(key_cols)
-    keyed = (
+    keyed = pin(
         batch_df.select(*key_cols)
         .na.drop(subset=key_cols)  # UNIQUE ignores NULL keys
         .groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("_d"))
-        .localCheckpoint(eager=False)  # consumed by probe + merge
+        .agg(F.count(F.lit(1)).alias("_d")),
+        eager=False,  # consumed by probe + merge
     )
     # keyed_count: touched keys ≤ batch rows — the bound is already in
     # hand from the scalar-aggregate job above, so the delta probe

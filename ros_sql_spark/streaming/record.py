@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ros_sql_spark.api import CATALOG_FILE, _meta_to_dict
+from ros_sql_spark.functions.pin import cache
 from ros_sql_spark.operators.normalize import normalize
 from ros_sql_spark.sources.catalog import EngineCatalog, namify
 
@@ -123,13 +124,10 @@ def record_stream(
         )
 
     def body(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.cache()
-        try:
-            for topic, name, tbl in _demux_normalized(batch, topic_col, catalog):
-                base = os.path.join(store_path, namify(topic))
-                tbl.write.mode("append").parquet(os.path.join(base, name))
-        finally:
-            batch.unpersist()
+        batch = cache(batch)
+        for topic, name, tbl in _demux_normalized(batch, topic_col, catalog):
+            base = os.path.join(store_path, namify(topic))
+            tbl.write.mode("append").parquet(os.path.join(base, name))
 
     return _start(stream, body, checkpoint_path, available_now)
 
@@ -157,27 +155,24 @@ def record_stream_snapshot(
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
 
     def body(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.cache()
-        try:
-            for topic, name, tbl in _demux_normalized(batch, topic_col, catalog):
-                table = os.path.join(store_path, namify(topic), name)
-                # time-series data skipping: record per-file min/max of
-                # the topic's timestamp (and its key) in each commit's
-                # manifest, so time-range replays prune whole files —
-                # streaming appends are naturally time-clustered, which
-                # is exactly when manifest stats pay off (each batch's
-                # file covers one narrow ts window).
-                entry = catalog.topics.get(topic)
-                stats = [
-                    c
-                    for c in ((entry.ts_col,) + tuple(entry.key_cols) if entry else ())
-                    if c and c in tbl.columns
-                ]
-                snapshot_append_batch(
-                    tbl, table, batch_id, stats_cols=stats or None
-                )
-        finally:
-            batch.unpersist()
+        batch = cache(batch)
+        for topic, name, tbl in _demux_normalized(batch, topic_col, catalog):
+            table = os.path.join(store_path, namify(topic), name)
+            # time-series data skipping: record per-file min/max of
+            # the topic's timestamp (and its key) in each commit's
+            # manifest, so time-range replays prune whole files —
+            # streaming appends are naturally time-clustered, which
+            # is exactly when manifest stats pay off (each batch's
+            # file covers one narrow ts window).
+            entry = catalog.topics.get(topic)
+            stats = [
+                c
+                for c in ((entry.ts_col,) + tuple(entry.key_cols) if entry else ())
+                if c and c in tbl.columns
+            ]
+            snapshot_append_batch(
+                tbl, table, batch_id, stats_cols=stats or None
+            )
 
     return _start(stream, body, checkpoint_path, available_now)
 
@@ -218,20 +213,17 @@ def record_stream_jdbc(
     catalog = EngineCatalog.load(os.path.join(store_path, CATALOG_FILE))
 
     def body(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.cache()
-        try:
-            for topic, name, tbl in _demux_normalized(batch, topic_col, catalog):
-                root_keys = set(catalog.topics[topic].key_cols)
-                tkeys = [
-                    c
-                    for c in tbl.columns
-                    if c in root_keys or c.startswith("_idx__")
-                ]
-                jdbc_idempotent_batch(
-                    tbl, batch_id, url, table_prefix + name, tkeys, driver=driver
-                )
-        finally:
-            batch.unpersist()
+        batch = cache(batch)
+        for topic, name, tbl in _demux_normalized(batch, topic_col, catalog):
+            root_keys = set(catalog.topics[topic].key_cols)
+            tkeys = [
+                c
+                for c in tbl.columns
+                if c in root_keys or c.startswith("_idx__")
+            ]
+            jdbc_idempotent_batch(
+                tbl, batch_id, url, table_prefix + name, tkeys, driver=driver
+            )
 
     return _start(stream, body, checkpoint_path, available_now)
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ros_sql_spark.functions.pin import pin, pin_scope
+
 __all__ = ["hourly_rollup", "rollup_upsert_batch", "continuous_rollup"]
 
 _KEYS = ["w_start", "event_type"]
@@ -52,6 +54,7 @@ def hourly_rollup(events: DataFrame, width: str = "1 hour",
     )
 
 
+@pin_scope()  # nothing pinned here escapes
 def rollup_upsert_batch(batch_df: DataFrame, batch_id: int,
                         store_path: str) -> None:
     """Upsert one micro-batch of (re-)emitted window rows into the
@@ -94,7 +97,7 @@ def rollup_upsert_batch(batch_df: DataFrame, batch_id: int,
     # fails the job (read-while-overwrite hazard).  localCheckpoint
     # pins the rows in executor block storage and cuts the lineage back
     # to the store files entirely.
-    merged = keep.unionByName(b).localCheckpoint(eager=True)
+    merged = pin(keep.unionByName(b), eager=True)
     # Dynamic partition overwrite is the correctness contract (static
     # would DELETE every untouched history partition).  Set the session
     # conf for the write (writer option alone is belt) and verify the

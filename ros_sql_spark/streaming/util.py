@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ros_sql_spark.functions.pin import pin, pin_scope
+
 __all__ = ["start_foreach_batch", "multiplicity_delta", "merged_multiplicities"]
 
 
@@ -24,9 +26,16 @@ def start_foreach_batch(
     delivery semantics (idempotency, watermark tags), this owns the
     writer wiring.  ``output_mode`` is declarative only for
     foreachBatch (the body sees every batch either way) but kept
-    explicit so intent reads at the call site."""
+    explicit so intent reads at the call site.  Each micro-batch runs
+    inside one ``pin_scope()``: every pin and cache the body takes is
+    freed when the batch ends."""
+
+    def scoped(batch: DataFrame, batch_id: int) -> None:
+        with pin_scope():
+            body(batch, batch_id)
+
     writer = (
-        stream.writeStream.foreachBatch(body)
+        stream.writeStream.foreachBatch(scoped)
         .option("checkpointLocation", checkpoint_path)
         .outputMode(output_mode)
     )
@@ -121,7 +130,7 @@ def multiplicity_delta(
         joined = keyed.select(
             *key_cols, "_d", F.lit(0).cast("bigint").alias("_old")
         )
-    return joined.localCheckpoint(eager=True)
+    return pin(joined, eager=True)
 
 
 def merged_multiplicities(joined, key_cols: list[str]):

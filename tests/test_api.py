@@ -27,6 +27,17 @@ def test_record_playback_events(spark, tmp_path):
     ts = [r.ts_ns for r in rows]
     assert ts == sorted(ts)
 
+    # default keys (first column + ts_col) already hold ts_ns: the
+    # playback sort must list it once, with the same row order
+    store2 = str(tmp_path / "store_default_keys")
+    record(spark, {"/events": ev}, store2, ts_col="ts_ns")
+    back2 = playback(spark, store2, "/events")
+    plan = back2._jdf.queryExecution().optimizedPlan().toString()
+    sort = next(ln for ln in plan.splitlines() if "Sort [" in ln)
+    sort_keys = sort[sort.index("[") + 1 : sort.index("]")]
+    assert sort_keys.count("ts_ns#") == 1, sort
+    assert [tuple(r) for r in back2.collect()] == [tuple(r) for r in rows]
+
 
 def test_playback_time_range(spark, tmp_path):
     store = str(tmp_path / "store")

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from ros_sql_spark.functions.pin import pin, pin_scope
 from ros_sql_spark.operators.dedup import exact_dedup, minhash_pairs
 from ros_sql_spark.operators.multimodal import as_assets, extract_features
 from ros_sql_spark.operators.similarity import brute_force_knn, lsh_knn
@@ -429,10 +430,8 @@ def test_remove_duplicate_spans_null_text_drops(spark):
         [(1, "some real text here"), (2, None)],
         "doc_id long, text string",
     )
-    out = remove_duplicate_spans(df, k=3, min_docs=2)
-    got = {r.doc_id for r in out.collect()}
-    if out._rosql_cached is not None:
-        out._rosql_cached.unpersist()
+    with pin_scope():
+        got = {r.doc_id for r in remove_duplicate_spans(df, k=3, min_docs=2).collect()}
     assert got == {1}
 
 
@@ -869,31 +868,67 @@ def test_components_incremental_semi_reduce_mode_equivalent(spark):
     base_nodes = spark.createDataFrame(
         [(i,) for i in (1, 2, 3, 10, 11, 20, 21, 30, 31, 40)], "id long"
     )
-    base = connected_components(base_edges, nodes=base_nodes)
     inc_edges = spark.createDataFrame(
         [(3, 10), (21, 50), (50, 51), (51, 30), (60, 61)],
         "id_a long, id_b long",
     )
     new_nodes = spark.createDataFrame([(70,)], "id long")
+    # the base map as one scan, the shape of the stored label table the
+    # streaming path reads
+    base_scan = r"Scan ExistingRDD\[id#\d+L,component#\d+L\]"
 
-    for fn in (
-        connected_components_incremental,
-        connected_components_incremental_delta,
-    ):
-        plain = {
-            (r.id, r.component)
-            for r in fn(inc_edges, base, new_nodes=new_nodes).collect()
-        }
-        reduced_df = fn(
-            inc_edges, base, new_nodes=new_nodes, semi_reduce_base=True
-        )
-        reduced = {(r.id, r.component) for r in reduced_df.collect()}
-        assert reduced == plain, fn.__name__
-        p = reduced_df._jdf.queryExecution().executedPlan().toString()
-        # the base-map lookups ride broadcasts in this mode (the
-        # components loop inside the contraction may still shuffle —
-        # that's the increment-sized subgraph, not the base map)
-        assert "BroadcastHashJoin" in p, p
+    with pin_scope():
+        base = pin(connected_components(base_edges, nodes=base_nodes), eager=True)
+        for fn in (
+            connected_components_incremental,
+            connected_components_incremental_delta,
+        ):
+            plain_df = fn(inc_edges, base, new_nodes=new_nodes)
+            plain = {(r.id, r.component) for r in plain_df.collect()}
+            reduced_df = fn(
+                inc_edges, base, new_nodes=new_nodes, semi_reduce_base=True
+            )
+            reduced = {(r.id, r.component) for r in reduced_df.collect()}
+            assert reduced == plain, fn.__name__
+            p = reduced_df._jdf.queryExecution().executedPlan().toString()
+            # every base-map read meets a broadcast join first — never a
+            # sort-merge or shuffled-hash join that would shuffle the base
+            # side (the components loop inside the contraction may still
+            # shuffle: that's the increment-sized subgraph)
+            above = _joins_above(p, base_scan)
+            assert above and set(above) == {"BroadcastHashJoin"}, p
+            # the default mode does shuffle it: the check has teeth
+            p = plain_df._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" not in _joins_above(p, base_scan), p
+
+
+def _joins_above(plan: str, leaf: str) -> list[str]:
+    """The nearest join node above each line of a plan tree string that
+    matches ``leaf``."""
+    import re
+
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        m = re.search(r"[+:]- ", line)
+        return m.start() if m else -1
+
+    out = []
+    for i, line in enumerate(lines):
+        if not re.search(leaf, line):
+            continue
+        d = depth(line)
+        for up in reversed(lines[:i]):
+            if depth(up) < d:
+                d = depth(up)
+                node = up[d + 3:].split(" ")[0] if d >= 0 else up
+                if "Join" in node:
+                    out.append(node)
+                    break
+    return out
+
+
+def test_components_incremental_on_corpus_pairs(spark):
     """End-to-end with a real pair generator: base components from the
     corpus's base slice, increment pairs from setsim_join_incremental —
     final labels equal the full-graph recompute."""
@@ -1556,30 +1591,43 @@ def test_bigint_partial_margin_guard(spark):
         spark.conf.set(key, old)
 
 
-def test_release_local_checkpoints_frees_storage(spark):
-    """release_local_checkpoints drops the checkpoint RDD's blocks (the
-    streaming per-batch reclaim) and no-ops harmlessly on plain frames."""
-    from ros_sql_spark.functions.util import release_local_checkpoints
+def test_pin_scope_frees_storage(spark):
+    """pin_scope() drops the checkpoint RDD's blocks and the caches
+    taken inside it (the streaming per-batch reclaim), also when the
+    block raises; it no-ops harmlessly on plain frames; a pin taken
+    outside any scope is left to the ContextCleaner."""
+    from ros_sql_spark.functions.pin import cache
 
-    df = (
-        spark.range(1000)
-        .selectExpr("id", "id * 2 AS y")
-        .localCheckpoint(eager=False)
-    )
-    assert df.count() == 1000  # materialize the pin
-    plan = df._jdf.queryExecution().analyzed()
-    assert plan.getClass().getSimpleName() == "LogicalRDD"
-    assert plan.rdd().getStorageLevel().useMemory()
-    release_local_checkpoints(df, spark.range(3))  # plain frame: no-op
-    lvl = plan.rdd().getStorageLevel()
+    def level(df):
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LogicalRDD"
+        return plan.rdd().getStorageLevel()
+
+    with pin_scope() as held:
+        df = pin(spark.range(1000).selectExpr("id", "id * 2 AS y"), eager=False)
+        assert df.count() == 1000  # materialize the pin
+        assert level(df).useMemory()
+        c = cache(spark.range(10))
+        assert c.count() == 10 and c.is_cached
+        held.append(spark.range(3))  # plain frame: no-op
+    lvl = level(df)
     assert not (lvl.useMemory() or lvl.useDisk())
+    assert not c.is_cached
+
+    with pytest.raises(RuntimeError):
+        with pin_scope():
+            failed = pin(spark.range(5), eager=True)
+            raise RuntimeError("consumer failed")
+    assert not level(failed).useMemory()
+
+    unscoped = pin(spark.range(5), eager=True)
+    assert level(unscoped).useMemory()
 
 
-def test_setsim_incremental_pins_out_release(spark, docs):
-    """pins_out hands the operator's per-batch checkpoint to the caller;
-    releasing it AFTER the consuming action is safe and the output is
-    unchanged (the streaming ingest reclaim path)."""
-    from ros_sql_spark.functions.util import release_local_checkpoints
+def test_setsim_incremental_pin_scope_release(spark, docs):
+    """The operator's per-batch checkpoint registers in the caller's
+    scope; closing it AFTER the consuming action is safe and the output
+    is unchanged (the streaming ingest reclaim path)."""
     from ros_sql_spark.operators.dedup import (
         setsim_index,
         setsim_join_incremental,
@@ -1591,10 +1639,12 @@ def test_setsim_incremental_pins_out_release(spark, docs):
     expected = setsim_join_incremental(
         new, idx, threshold=0.5, k=5
     ).collect()
-    pins: list = []
-    got = setsim_join_incremental(
-        new, idx, threshold=0.5, k=5, pins_out=pins
-    ).collect()
-    assert len(pins) == 1
-    release_local_checkpoints(*pins)
+    with pin_scope() as held:
+        got = setsim_join_incremental(
+            new, idx, threshold=0.5, k=5
+        ).collect()
+        assert len(held) == 1
+    plan = held[0]._jdf.queryExecution().analyzed()
+    lvl = plan.rdd().getStorageLevel()
+    assert not (lvl.useMemory() or lvl.useDisk())
     assert sorted(map(tuple, got)) == sorted(map(tuple, expected))

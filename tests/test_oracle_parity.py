@@ -16,6 +16,7 @@ from collections import Counter
 
 import pytest
 
+from ros_sql_spark.functions.pin import pin_scope
 from ros_sql_spark.plans.oracles import ORACLES
 from ros_sql_spark.plans.queries import QUERIES
 from tests.conftest import SF_MEDIUM, register_duck_views
@@ -64,7 +65,10 @@ def rows_to_counter(rows, colnames):
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
-    sdf = QUERIES[name](spark, SF_DIR)
+    # one scope per query: the pins it builds are freed when it ends
+    with pin_scope():
+        sdf = QUERIES[name](spark, SF_DIR)
+        srows = sdf.collect()
 
     # Output-schema policy: driver-visible results must never carry
     # DecimalType — the driver's pandas canonicalization renders Spark
@@ -85,7 +89,6 @@ def test_query_matches_oracle(name, spark, duck):
             f"{name}: output column {f.name} is an array/map — digest it"
         )
 
-    srows = sdf.collect()
     scols = sdf.columns
 
     if name not in ORACLES:

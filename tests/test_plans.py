@@ -9,6 +9,7 @@ import re
 
 import pytest
 
+from ros_sql_spark.functions.pin import pin_scope
 from ros_sql_spark.plans.queries import QUERIES
 from tests.conftest import SF_SMALL
 
@@ -28,8 +29,10 @@ def plan_of(spark, name: str) -> str:
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     key = (name, thr)
     if key not in _PLAN_CACHE:
-        df = QUERIES[name](spark, SF_SMALL)
-        _PLAN_CACHE[key] = df._jdf.queryExecution().executedPlan().toString()
+        # only the string is kept: free the eager pins plan building took
+        with pin_scope():
+            df = QUERIES[name](spark, SF_SMALL)
+            _PLAN_CACHE[key] = df._jdf.queryExecution().executedPlan().toString()
     return _PLAN_CACHE[key]
 
 

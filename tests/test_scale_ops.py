@@ -11,6 +11,7 @@ import pytest
 pytestmark = pytest.mark.slow
 from hypothesis import HealthCheck, given, settings, strategies as st
 
+from ros_sql_spark.functions.pin import pin_scope
 from ros_sql_spark.operators.dedup import ngram_jaccard_pairs
 from ros_sql_spark.operators.skew import salted_aggregate, salted_broadcast_left_join
 from ros_sql_spark.plans.queries import q32_ngram_jaccard
@@ -605,17 +606,15 @@ def test_incremental_minhash_equals_batch_minus_base_pairs(spark):
     base_ids = {r.doc_id for r in base.select("doc_id").collect()}
 
     thr = 0.2
-    full = minhash_pairs(docs, threshold=thr)
-    expect = {
-        (r.id_a, r.id_b): r.jaccard_est
-        for r in full.collect()
-        if not (r.id_a in base_ids and r.id_b in base_ids)
-    }
-    full._rosql_cached.unpersist()
-
-    inc = minhash_pairs_incremental(new, minhash_index(base), threshold=thr)
-    got = {(r.id_a, r.id_b): r.jaccard_est for r in inc.collect()}
-    inc._rosql_cached.unpersist()
+    with pin_scope():
+        expect = {
+            (r.id_a, r.id_b): r.jaccard_est
+            for r in minhash_pairs(docs, threshold=thr).collect()
+            if not (r.id_a in base_ids and r.id_b in base_ids)
+        }
+    with pin_scope():
+        inc = minhash_pairs_incremental(new, minhash_index(base), threshold=thr)
+        got = {(r.id_a, r.id_b): r.jaccard_est for r in inc.collect()}
     assert got == expect
 
 
@@ -633,9 +632,10 @@ def test_incremental_minhash_base_never_self_pairs(spark):
     )
     new = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
     base_ids = {r.doc_id for r in base.select("doc_id").collect()}
-    inc = minhash_pairs_incremental(new, minhash_index(base), threshold=0.2)
-    rows = inc.collect()
-    inc._rosql_cached.unpersist()
+    with pin_scope():
+        rows = minhash_pairs_incremental(
+            new, minhash_index(base), threshold=0.2
+        ).collect()
     assert all(
         not (r.id_a in base_ids and r.id_b in base_ids) for r in rows
     )

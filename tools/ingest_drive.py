@@ -43,6 +43,8 @@ from pyspark.sql import functions as F
 
 from tools.scale_drive import synthesize
 
+from ros_sql_spark.functions.pin import pin
+
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--curate"]
@@ -283,12 +285,12 @@ def main() -> int:
         # its per-batch cost must be flat too (O(k) state per group)
         from ros_sql_spark.sources.snapshot import snapshot_read
 
-        hh = snapshot_read(spark, f"{work}/hh").localCheckpoint(eager=True)
+        hh = pin(snapshot_read(spark, f"{work}/hh"), eager=True)
         keyed = docs.select("source", F.md5("text").alias("key"))
-        exact = (
+        exact = pin(
             keyed.groupBy("source", "key")
-            .agg(F.count("*").cast("bigint").alias("c"))
-            .localCheckpoint(eager=True)
+            .agg(F.count("*").cast("bigint").alias("c")),
+            eager=True,
         )
         surv = hh.filter(F.col("key").isNotNull())
         bad_bounds = (

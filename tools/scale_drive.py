@@ -39,6 +39,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ros_sql_spark.functions.pin import cache, pin, pin_scope
+
 # 20 chars → 19 distinct NON-identity rotations: copies 1..19 each get
 # a unique substitution (rotation 0 would be the identity and silently
 # duplicate copy 0 — the bug class this comment guards)
@@ -167,46 +169,46 @@ def main() -> int:
             survivors <= n_docs - planted * (copies - 1)
         )
 
-        # 2. banded MinHash near-dup pairs (never all-pairs)
-        pairs = minhash_pairs(docs, threshold=0.8, max_bucket_size=4 * copies)
-        pairs_mat = timed(
-            "minhash_pairs",
-            lambda: pairs.localCheckpoint(eager=True),
-        )
-        if pairs._rosql_cached is not None:
-            pairs._rosql_cached.unpersist()
-        n_pairs = pairs_mat.count()
-        # both planted families pair across copies: 2*planted groups of
-        # size `copies` → >= 90% of C(copies,2) each (banding recall)
-        floor = int(2 * planted * (copies * (copies - 1) // 2) * 0.9)
-        checks["minhash_recall_floor"] = n_pairs >= floor
+        # 2-3 share one scope: the signature cache and the pinned pairs
+        # are freed once components has run
+        with pin_scope():
+            # 2. banded MinHash near-dup pairs (never all-pairs)
+            pairs = minhash_pairs(docs, threshold=0.8, max_bucket_size=4 * copies)
+            pairs_mat = timed(
+                "minhash_pairs",
+                lambda: pin(pairs, eager=True),
+            )
+            n_pairs = pairs_mat.count()
+            # both planted families pair across copies: 2*planted groups of
+            # size `copies` → >= 90% of C(copies,2) each (banding recall)
+            floor = int(2 * planted * (copies * (copies - 1) // 2) * 0.9)
+            checks["minhash_recall_floor"] = n_pairs >= floor
 
-        # 3. duplicate groups via connected components: every planted id
-        # should land in a component spanning all its copies (base-corpus
-        # duplicates can MERGE planted groups, so count member NODES of
-        # full-size-or-larger components, not exact-size components)
-        comp_nodes = timed(
-            "components",
-            lambda: connected_components(pairs_mat)
-            .groupBy("component")
-            .count()
-            .filter(F.col("count") >= copies)
-            .agg(F.sum("count"))
-            .collect()[0][0]
-            or 0,
-        )
-        checks["planted_ids_in_dup_groups"] = comp_nodes >= int(
-            2 * planted * copies * 0.9
-        )
+            # 3. duplicate groups via connected components: every planted id
+            # should land in a component spanning all its copies (base-corpus
+            # duplicates can MERGE planted groups, so count member NODES of
+            # full-size-or-larger components, not exact-size components)
+            comp_nodes = timed(
+                "components",
+                lambda: connected_components(pairs_mat)
+                .groupBy("component")
+                .count()
+                .filter(F.col("count") >= copies)
+                .agg(F.sum("count"))
+                .collect()[0][0]
+                or 0,
+            )
+            checks["planted_ids_in_dup_groups"] = comp_nodes >= int(
+                2 * planted * copies * 0.9
+            )
 
         # 3b. substring-level exact dedup: the planted exact family is
         # wall-to-wall duplicated spans, so those docs must vanish
         from ros_sql_spark.operators.dedup import remove_duplicate_spans
 
-        span_df = remove_duplicate_spans(docs, k=8, min_docs=3)
-        span_rows = timed("span_dedup", span_df.count)
-        if span_df._rosql_cached is not None:
-            span_df._rosql_cached.unpersist()
+        with pin_scope():
+            span_df = remove_duplicate_spans(docs, k=8, min_docs=3)
+            span_rows = timed("span_dedup", span_df.count)
         # the exact family is wall-to-wall duplicated spans: (nearly)
         # all planted*copies docs must vanish, not just "some doc"
         checks["span_dedup_drops_duplicated_docs"] = span_rows <= (
@@ -247,11 +249,9 @@ def main() -> int:
                 "knn_brute", lambda: brute_force_knn(emb, queries, k=10).collect()
             )
         }
-        lsh = lsh_knn(emb, queries, k=10)
-        lsh_rows = timed("knn_lsh", lambda: lsh.collect())
-        cached = getattr(lsh, "_rosql_cached", None)
-        if cached is not None:
-            cached.unpersist()
+        with pin_scope():
+            lsh = lsh_knn(emb, queries, k=10)
+            lsh_rows = timed("knn_lsh", lambda: lsh.collect())
         approx = {(r.query_id, r.vec_id) for r in lsh_rows}
         recall = len(exact & approx) / max(1, len(exact))
         checks["lsh_recall_ge_0.5"] = recall >= 0.5
@@ -277,12 +277,10 @@ def main() -> int:
         n_pairs_exact = planted * (copies * (copies - 1) // 2)
         # persist: both counts below would otherwise re-run the whole
         # prefix/verify pipeline (the curate-stage persist discipline)
-        setsim = setsim_join(docs, "doc_id", "text", threshold=0.9, k=8).persist()
-        try:
+        with pin_scope():
+            setsim = cache(setsim_join(docs, "doc_id", "text", threshold=0.9, k=8))
             n_setsim = timed("setsim_join", setsim.count)
             perfect = setsim.filter("jaccard = 1.0").count()
-        finally:
-            setsim.unpersist()
         checks["setsim_finds_planted_exact_pairs"] = (
             perfect >= n_pairs_exact
         )
@@ -502,11 +500,11 @@ def main() -> int:
             )
             a = d.select("h", F.col("doc_id").alias("a"))
             b = d.select("h", F.col("doc_id").alias("b"))
-            und = (
+            und = pin(
                 a.join(b, "h")
                 .filter(F.col("a") < F.col("b"))
-                .select("a", "b")
-                .localCheckpoint(eager=True)  # feeds triangle AND pagerank
+                .select("a", "b"),
+                eager=True,  # feeds triangle AND pagerank
             )
             tri = triangle_count(und).collect()[0]
             exp = (
@@ -567,13 +565,11 @@ def main() -> int:
             k = 8
             keyed = docs.select("source", F.md5("text").alias("key"))
             # consumed by three separate check actions → eager pin
-            sk = topk_sketch(keyed, "source", "key", k=k).localCheckpoint(
-                eager=True
-            )
-            exact = (
+            sk = pin(topk_sketch(keyed, "source", "key", k=k), eager=True)
+            exact = pin(
                 keyed.groupBy("source", "key")
-                .agg(F.count("*").cast("bigint").alias("c"))
-                .localCheckpoint(eager=True)  # two consuming actions
+                .agg(F.count("*").cast("bigint").alias("c")),
+                eager=True,  # two consuming actions
             )
             surv = sk.filter(F.col("key").isNotNull())
             bad_bounds = (
@@ -813,17 +809,14 @@ def main() -> int:
 
         pd_dir = timed("probe_synth", _probe_dir)
 
-        def _noop(df: DataFrame) -> None:
-            df.write.format("noop").mode("overwrite").save()
-            cached = getattr(df, "_rosql_cached", None)
-            if cached is not None:
-                cached.unpersist()
-
         def _probe_run(d: str) -> dict:
             t = {}
             for name in _PROBE:
                 t0 = time.time()
-                _noop(QUERIES[name](spark, d))
+                with pin_scope():
+                    QUERIES[name](spark, d).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
                 t[name] = round(time.time() - t0, 2)
             return t
 
