@@ -10,9 +10,11 @@ relational database via SQLAlchemy and replays them byte-identically
 - functions/ type mapping, time split/recombine, DuckDB-parity helpers,
              text analysis (reference: factories.py type_map / time split —
              SURVEY.md §2.1 R2/R8)
-- operators/ normalize/denormalize (message shredding/reassembly —
-             reference factories.py msg2sql/sql2msg, SURVEY.md §2.1
-             R1/R4/R5/R11), dedup, similarity search, multimodal columns
+- operators/ normalize/denormalize (message shredding/reassembly for
+             the JDBC sink — reference factories.py msg2sql/sql2msg,
+             SURVEY.md §2.1 R1/R4/R5/R11; parquet and snapshot stores
+             keep messages nested), dedup, similarity search,
+             multimodal columns
 - plans/     the declared query suite (SURVEY.md §2.3) + DuckDB oracles
 - streaming/ Structured Streaming twins of record/playback
              (reference: scripts/record.py, scripts/playback.py —

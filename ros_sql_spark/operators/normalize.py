@@ -7,6 +7,10 @@ reassembles byte-identical messages by walking the backref catalog with
 per-parent child SELECTs ordered by idx (R11).  (SURVEY.md §2.1,
 factories.py msg2sql/sql2msg, models.py backrefs.)
 
+Used at the SQL boundary only: ``streaming.record.record_stream_jdbc``
+lands these flat tables in a database.  Parquet and snapshot stores keep
+each message nested (api.py) and never shred.
+
 Spark-first re-expression:
 - ``normalize(df, keys)`` turns one nested DataFrame into a dict of flat
   tables.  Arrays shred via ``posexplode`` (index preserved — exactly the

@@ -24,7 +24,9 @@ from pyspark.sql import types as T
 
 __all__ = ["SCHEMA_VERSION", "TopicEntry", "EngineCatalog", "namify"]
 
-SCHEMA_VERSION = 1
+# 2: one nested table per topic.  Version 1 stores shredded each topic
+# into a root table plus child tables described by a backref ledger.
+SCHEMA_VERSION = 2
 
 _MANGLE_RE = re.compile(r"[^A-Za-z0-9_]")
 
@@ -54,7 +56,6 @@ class TopicEntry:
     schema_json: str  # Spark StructType json (replaces msg-class name + md5)
     key_cols: list[str] = dc_field(default_factory=list)
     ts_col: str | None = None  # record-time column (R10 timestamp bookkeeping)
-    children: list[dict] = dc_field(default_factory=list)  # backref ledger
 
 
 @dataclass
@@ -72,7 +73,6 @@ class EngineCatalog:
         schema: T.StructType,
         key_cols: list[str],
         ts_col: str | None = None,
-        children: list[dict] | None = None,
     ) -> TopicEntry:
         """Register a topic; idempotent if re-declared with an identical
         schema, ValueError if the schema conflicts (R15 semantics)."""
@@ -82,7 +82,6 @@ class EngineCatalog:
             schema_json=schema.json(),
             key_cols=list(key_cols),
             ts_col=ts_col,
-            children=list(children or []),
         )
         existing = self.topics.get(topic)
         if existing is not None:
@@ -91,10 +90,9 @@ class EngineCatalog:
                     f"topic {topic!r} already declared with a different schema"
                 )
             # idempotent re-declare must be IDENTICAL re-declare: a
-            # matching schema with different keys/ts/children would
-            # write data the catalog misdescribes and corrupt later
-            # reassembly (round-8 review)
-            for field in ("key_cols", "ts_col", "children"):
+            # matching schema with different keys/ts would write data
+            # the catalog misdescribes (round-8 review)
+            for field in ("key_cols", "ts_col"):
                 if getattr(existing, field) != getattr(entry, field):
                     raise ValueError(
                         f"topic {topic!r} already declared with different "
@@ -138,9 +136,16 @@ class EngineCatalog:
         with open(path) as fh:
             doc = json.load(fh)
         if doc.get("version") != SCHEMA_VERSION:
+            layout = (
+                ": version 1 stores shred each topic into child tables, "
+                "this engine keeps each message nested in one table per "
+                "topic — re-record the store"
+                if doc.get("version") == 1
+                else ""
+            )
             raise ValueError(
                 f"catalog schema version {doc.get('version')!r} is not "
-                f"supported (engine speaks {SCHEMA_VERSION})"
+                f"supported (engine speaks {SCHEMA_VERSION}){layout}"
             )
         cat = cls(version=doc["version"])
         for k, v in doc["topics"].items():

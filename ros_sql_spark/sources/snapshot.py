@@ -335,12 +335,14 @@ def _scan_footers(
         keep.append(p)
         if not cols:
             continue
-        name_to_idx = {
-            md.schema.column(i).name: i for i in range(md.num_columns)
+        # by dotted path, not leaf name: a struct leaf sharing a
+        # top-level name (hdr.ts_ns vs ts_ns) must not shadow it
+        path_to_idx = {
+            md.schema.column(i).path: i for i in range(md.num_columns)
         }
         fstats: dict = {}
         for c in cols:
-            ci = name_to_idx.get(c)
+            ci = path_to_idx.get(c)
             if ci is None:
                 continue
             lo = hi = None

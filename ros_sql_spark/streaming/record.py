@@ -4,9 +4,9 @@
 The reference subscribes N ROS topics at once and lands each message in
 that topic's normalized tables.  Here the live bus is a multiplexed
 streaming DataFrame carrying a topic column; each micro-batch is
-demultiplexed, shredded with operators.normalize, and appended to the
-same on-disk store layout that ``api.playback`` reads — so record →
-store → ordered replay is one continuous, catalog-described pipeline:
+demultiplexed and each topic's rows appended, nested as written, to the
+one-table-per-topic store layout that ``api.playback`` reads — so record
+→ store → ordered replay is one continuous, catalog-described pipeline:
 
     cat = declare_topics(store, {"click": schema, ...}, ["event_id"])
     q = record_stream(stream, "event_type", store, ["event_id"], ck)
@@ -16,12 +16,13 @@ store → ordered replay is one continuous, catalog-described pipeline:
 Schema declaration happens UP FRONT (R1: declare-before-write; R15:
 idempotent re-declare) — a topic arriving in the stream without a
 catalog entry is an error surfaced at declare time, not silent schema
-drift at write time.
+drift at write time.  Only the JDBC recorder shreds messages into
+relational tables (operators.normalize), because a SQL database needs
+flat rows.
 
 Scale notes: the demux loop appends per topic per batch — N topics cost
 N filtered writes over one cached batch; at high topic counts switch to
-a single ``partitionBy(topic)`` write of the root table and shred child
-tables with topic kept as a key column.
+a single ``partitionBy(topic)`` write.
 """
 
 from __future__ import annotations
@@ -32,10 +33,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ros_sql_spark.api import CATALOG_FILE, _meta_to_dict
+from ros_sql_spark.api import CATALOG_FILE, table_path
 from ros_sql_spark.functions.pin import cache
 from ros_sql_spark.operators.normalize import normalize
-from ros_sql_spark.sources.catalog import EngineCatalog, namify
+from ros_sql_spark.sources.catalog import EngineCatalog
 
 __all__ = [
     "declare_topics",
@@ -51,28 +52,17 @@ def declare_topics(
     key_cols: list[str],
     ts_col: str | None = "ts_ns",
 ) -> EngineCatalog:
-    """R1/R15: declare every topic's schema before any message lands.
-
-    The backref ledger is derived by dry-running the shred planner on an
-    empty frame of the declared schema, so playback can reassemble
-    without ever having seen data.
-    """
-    from ros_sql_spark.session import get_spark
-
+    """R1/R15: declare every topic's schema before any message lands."""
     cat_path = os.path.join(store_path, CATALOG_FILE)
     catalog = (
         EngineCatalog.load(cat_path) if os.path.exists(cat_path) else EngineCatalog()
     )
-    spark = get_spark()
     for topic, schema in topics.items():
-        empty = spark.createDataFrame([], schema)
-        norm = normalize(empty, list(key_cols), table=namify(topic))
         catalog.add_topic(
             topic,
             schema,
             key_cols=list(key_cols),
             ts_col=ts_col if ts_col in schema.names else None,
-            children=[_meta_to_dict(m) for m in norm.children],
         )
     os.makedirs(store_path, exist_ok=True)
     catalog.save(cat_path)
@@ -90,8 +80,8 @@ def record_stream(
     dedup_watermark: str = "1 hour",
     dedup_ts_col: str = "ts",
 ):
-    """R12/R7 twins: demux a multiplexed stream into per-topic normalized
-    stores, micro-batch-at-a-time.
+    """R12/R7 twins: demux a multiplexed stream into per-topic parquet
+    tables, micro-batch-at-a-time.
 
     Topic values in ``topic_col`` must match declared topic names
     (declare_topics).  Undeclared values fail the batch loudly — the
@@ -125,9 +115,9 @@ def record_stream(
 
     def body(batch: DataFrame, batch_id: int) -> None:
         batch = cache(batch)
-        for topic, name, tbl in _demux_normalized(batch, topic_col, catalog):
-            base = os.path.join(store_path, namify(topic))
-            tbl.write.mode("append").parquet(os.path.join(base, name))
+        for topic, sub in _demux(batch, topic_col, catalog):
+            table = table_path(store_path, catalog.topics[topic].table)
+            sub.write.mode("append").parquet(table)
 
     return _start(stream, body, checkpoint_path, available_now)
 
@@ -139,16 +129,17 @@ def record_stream_snapshot(
     checkpoint_path: str,
     available_now: bool = True,
 ):
-    """The recorder landing every normalized table in a SNAPSHOT table
+    """The recorder landing every topic in a SNAPSHOT table
     (sources/snapshot.py) instead of a bare parquet directory: each
-    micro-batch's tables become visible ATOMICALLY (readers see a whole
+    micro-batch's rows become visible ATOMICALLY (readers see a whole
     batch or none of it — the bare-parquet recorder exposes files as
     the committer moves them), redelivered batches are skipped by the
     per-table ``batch:<id>`` manifest tag (exactly-once without key
     anti-joins), and replayers can time-travel the store to any batch
-    boundary.  Layout: ``store_path/<topic>/<table>`` snapshot tables;
-    read with ``snapshot_read``; same declare-before-write catalog
-    contract as record_stream.
+    boundary.  Layout: one snapshot table per topic at
+    ``store_path/<topic>/<topic>`` (``api.table_path``); read with
+    ``snapshot_read``; same declare-before-write catalog contract as
+    record_stream.
     """
     from ros_sql_spark.sources.snapshot import snapshot_append_batch
 
@@ -156,22 +147,20 @@ def record_stream_snapshot(
 
     def body(batch: DataFrame, batch_id: int) -> None:
         batch = cache(batch)
-        for topic, name, tbl in _demux_normalized(batch, topic_col, catalog):
-            table = os.path.join(store_path, namify(topic), name)
+        for topic, sub in _demux(batch, topic_col, catalog):
+            entry = catalog.topics[topic]
             # time-series data skipping: record per-file min/max of
             # the topic's timestamp (and its key) in each commit's
             # manifest, so time-range replays prune whole files —
             # streaming appends are naturally time-clustered, which
             # is exactly when manifest stats pay off (each batch's
             # file covers one narrow ts window).
-            entry = catalog.topics.get(topic)
-            stats = [
-                c
-                for c in ((entry.ts_col,) + tuple(entry.key_cols) if entry else ())
-                if c and c in tbl.columns
-            ]
+            stats = [c for c in (entry.ts_col, *entry.key_cols) if c]
             snapshot_append_batch(
-                tbl, table, batch_id, stats_cols=stats or None
+                sub,
+                table_path(store_path, entry.table),
+                batch_id,
+                stats_cols=stats,
             )
 
     return _start(stream, body, checkpoint_path, available_now)
@@ -214,24 +203,26 @@ def record_stream_jdbc(
 
     def body(batch: DataFrame, batch_id: int) -> None:
         batch = cache(batch)
-        for topic, name, tbl in _demux_normalized(batch, topic_col, catalog):
-            root_keys = set(catalog.topics[topic].key_cols)
-            tkeys = [
-                c
-                for c in tbl.columns
-                if c in root_keys or c.startswith("_idx__")
-            ]
-            jdbc_idempotent_batch(
-                tbl, batch_id, url, table_prefix + name, tkeys, driver=driver
-            )
+        for topic, sub in _demux(batch, topic_col, catalog):
+            entry = catalog.topics[topic]
+            norm = normalize(sub, list(entry.key_cols), table=entry.table)
+            for name, tbl in norm.tables.items():
+                tkeys = [
+                    c
+                    for c in tbl.columns
+                    if c in entry.key_cols or c.startswith("_idx__")
+                ]
+                jdbc_idempotent_batch(
+                    tbl, batch_id, url, table_prefix + name, tkeys, driver=driver
+                )
 
     return _start(stream, body, checkpoint_path, available_now)
 
 
-def _demux_normalized(batch: DataFrame, topic_col: str, catalog: EngineCatalog):
-    """Yield (topic, table_name, table_df) for every normalized table of
-    every topic present in the micro-batch, enforcing the R1/R15
-    declare-before-write and schema-stability guards."""
+def _demux(batch: DataFrame, topic_col: str, catalog: EngineCatalog):
+    """Yield (topic, rows) for every topic present in the micro-batch,
+    ``topic_col`` dropped, enforcing the R1/R15 declare-before-write and
+    schema-stability guards."""
     declared = set(catalog.topics)
     seen = {r[0] for r in batch.select(topic_col).distinct().collect()}
     unknown = seen - declared
@@ -254,11 +245,7 @@ def _demux_normalized(batch: DataFrame, topic_col: str, catalog: EngineCatalog):
                 f"{sub.schema.simpleString()} != declared "
                 f"{declared_schema.simpleString()} (R15 guard)"
             )
-        norm = normalize(
-            sub, list(catalog.topics[topic].key_cols), table=namify(topic)
-        )
-        for name, tbl in norm.tables.items():
-            yield topic, name, tbl
+        yield topic, sub
 
 
 def _start(stream: DataFrame, body, checkpoint_path: str, available_now: bool):

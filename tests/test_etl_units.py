@@ -145,10 +145,13 @@ def test_catalog_version_guard(tmp_path):
     import json
 
     doc = json.load(open(p))
-    doc["version"] = 99
-    json.dump(doc, open(p, "w"))
-    with pytest.raises(ValueError, match="version"):
-        EngineCatalog.load(p)
+    # 1: a shredded store (root + child tables), which this engine's
+    # one-table-per-topic playback must not misread
+    for version in (99, 1):
+        doc["version"] = version
+        json.dump(doc, open(p, "w"))
+        with pytest.raises(ValueError, match="version"):
+            EngineCatalog.load(p)
 
 
 # ---------------------------------------------------------------------------

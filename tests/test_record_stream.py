@@ -354,11 +354,11 @@ def test_snapshot_store_time_range_prunes_files(spark, tmp_path):
 
 
 @pytest.mark.slow  # >=10s in the r11 duration profile
-def test_expire_retention_root_and_children(spark, tmp_path):
+def test_expire_retention_one_table(spark, tmp_path):
     """api.expire: messages older than the cutoff leave the snapshot
-    store — root files wholly inside the expired range drop
-    METADATA-ONLY (no rewrite), child rows purge by parent key with
-    file-bounds pruning, playback reassembles only survivors, and a
+    store — the topic's one table, nested arrays included — files
+    wholly inside the expired range drop METADATA-ONLY (no rewrite),
+    playback returns only survivors with their arrays intact, and a
     re-run of the same expire is a no-op (crash-retry contract)."""
     import os as _os
 
@@ -407,17 +407,9 @@ def test_expire_retention_root_and_children(spark, tmp_path):
     assert not q.isActive
 
     base = _os.path.join(store, namify("sensor"))
+    assert _os.listdir(base) == [namify("sensor")]  # one table per topic
     root = _os.path.join(base, namify("sensor"))
-    child = next(
-        _os.path.join(base, n)
-        for n in _os.listdir(base)
-        if n != namify("sensor")
-        and _os.path.isdir(_os.path.join(base, n, "_manifests"))
-    )
     pre_root = _read_manifest(spark, root, snapshot_versions(spark, root)[-1])
-    pre_child = _read_manifest(
-        spark, child, snapshot_versions(spark, child)[-1]
-    )
 
     # cutoff after slice 1: slices 0-1 (ids 0-24, 1000-1024) expire
     cutoff = 200 * 1_000_000_000
@@ -430,29 +422,17 @@ def test_expire_retention_root_and_children(spark, tmp_path):
     # expired slices were dropped from the manifest without a rewrite
     m_root = _read_manifest(spark, root, versions[namify("sensor")])
     assert set(m_root["files"]) <= set(pre_root["files"])
-    # children purged by parent key, surviving files carried via the
-    # event_id file-bounds pruning (disjoint id windows per slice)
-    child_rows = snapshot_read(spark, child)
-    assert child_rows.count() == 50 * 2
-    assert child_rows.agg(F.min("event_id")).collect()[0][0] >= 2000
-    m_child = _read_manifest(
-        spark, child, snapshot_versions(spark, child)[-1]
-    )
-    carried_child = [
-        f for f in m_child["files"] if f in set(pre_child["files"])
-    ]
-    assert carried_child, "child key pruning carried no files"
+    assert len(m_root["files"]) < len(pre_root["files"])
 
-    # playback reassembles only survivors, arrays intact
+    # playback returns only survivors, arrays intact
     rows = playback(spark, store, "sensor").collect()
     assert [r.event_id for r in rows] == sorted(
         [2000 + j for j in range(25)] + [3000 + j for j in range(25)]
     )
-    assert all(len(r.readings) == 2 for r in rows)
+    # each slice i wrote readings [i, j] for event_id i * 1000 + j
+    assert all(r.readings == [r.event_id // 1000, r.event_id % 1000] for r in rows)
 
     # idempotent retry: same cutoff again commits nothing new
     v_root = snapshot_versions(spark, root)[-1]
-    v_child = snapshot_versions(spark, child)[-1]
     expire(spark, store, "sensor", cutoff)
     assert snapshot_versions(spark, root)[-1] == v_root
-    assert snapshot_versions(spark, child)[-1] == v_child

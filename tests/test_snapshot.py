@@ -393,6 +393,24 @@ def test_stats_recorded_and_pruned_read(spark, tmp_path):
     assert point.filter("id = 500").count() == 1
 
 
+def test_stats_ignore_nested_leaf_sharing_a_top_level_name(spark, tmp_path):
+    """A struct leaf named like a top-level column (a ROS header's
+    hdr.ts_ns next to ts_ns) must not lend its min/max to the top-level
+    column: the stats would then prune files holding matching rows."""
+    from ros_sql_spark.sources.snapshot import _read_manifest
+
+    t = str(tmp_path / "tbl")
+    df = spark.createDataFrame(
+        [(5, (100, 0.5)), (6, (200, 1.5))],
+        "ts_ns long, hdr struct<ts_ns:long,x:double>",
+    ).coalesce(1)
+    v = snapshot_commit(df, t, stats_cols=["ts_ns"])
+    (stats,) = _read_manifest(spark, t, v)["stats"].values()
+    assert stats["ts_ns"][:2] == [5, 6]
+    got = snapshot_read(spark, t, prune={"ts_ns": (5, 6)})
+    assert sorted(r.ts_ns for r in got.collect()) == [5, 6]
+
+
 def test_prune_without_stats_keeps_all_files(spark, tmp_path):
     """Pruning on a column with no recorded stats must be a no-op (safe
     default), and results stay correct."""
